@@ -87,14 +87,14 @@ def test_unknown_route_404(server):
     assert e.value.code == 404
 
 
-def _call(server, method, path, body=None):
+def _call(server, method, path, body=None, timeout=None):
     req = urllib.request.Request(
         f"http://127.0.0.1:{server.port}{path}",
         data=json.dumps(body).encode() if body is not None else None,
         headers={"Content-Type": "application/json"},
         method=method,
     )
-    with urllib.request.urlopen(req) as resp:
+    with urllib.request.urlopen(req, timeout=timeout) as resp:
         return resp.status, json.loads(resp.read())
 
 
@@ -331,3 +331,194 @@ def test_get_nonexistent_node_and_rel(server):
             assert e.code == 404
     status, _, _ = _get(server, "/labels")  # server survives
     assert status == 200
+
+
+def test_dbs_totals_equal_stats_sums(server):
+    """/dbs counts the catalog in the same single job as /stats."""
+    _, stats = _call(server, "GET", "/stats")
+    _, dbs = _call(server, "GET", "/dbs")
+    db = dbs["databases"][0]
+    assert db["node_count"] == sum(stats["nodes"].values())
+    assert db["rel_count"] == sum(stats["rels"].values())
+
+
+# -- error status codes --------------------------------------------------------
+
+def _status(server, method, path, body=None):
+    try:
+        return _call(server, method, path, body)[0]
+    except urllib.error.HTTPError as e:
+        with e:
+            return e.code
+
+
+def test_bad_input_is_400(server):
+    # Cypher syntax error, Cypher compile error, unknown column (Spark
+    # AnalysisException)
+    assert _status(server, "POST", "/cypher", {"query": "MATCH (n:Nation RETURN"}) == 400
+    assert _status(server, "POST", "/cypher", {"query": "MATCH (n) RETURN n.x"}) == 400
+    assert _status(server, "POST", "/query", {
+        "label": "Region", "property": "no_such_column", "value": 1}) == 400
+
+
+def test_unexpected_error_is_500_and_logged(server, monkeypatch, caplog):
+    def boom(method, path, body_fn):
+        raise RuntimeError("engine bug")
+
+    monkeypatch.setattr(server, "_route_locked", boom)
+    with caplog.at_level("ERROR", logger="rs_graphdb_spark.sources.http_server"):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _call(server, "GET", "/labels")
+    with e.value:
+        assert e.value.code == 500
+        assert json.loads(e.value.read()) == {"error": "internal error: RuntimeError"}
+    rec = next(r for r in caplog.records if r.name.endswith("http_server"))
+    assert "GET /labels" in rec.getMessage()
+    assert rec.exc_info and "engine bug" in str(rec.exc_info[1])
+
+
+# -- read/write concurrency ----------------------------------------------------
+
+READ_TIMEOUT_S = 60
+
+
+def _in_thread(fn, *args):
+    import threading
+
+    out = {}
+
+    def run():
+        try:
+            out["result"] = fn(*args)
+        except Exception as exc:  # surfaced by the asserting test
+            out["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    return t, out
+
+
+def test_reads_do_not_wait_for_the_write_lock(server):
+    """Reads answer while a writer holds the lock; a Cypher CREATE sent
+    at the same time lands only once the lock is released."""
+    from rs_graphdb_spark.graph import label_base
+
+    create = {"query": "CREATE (n:Nation {n_name: 'LOCKLAND', n_regionkey: 0})"}
+    lockland = {"label": "Nation", "property": "n_name", "value": "LOCKLAND"}
+    server._lock.acquire()
+    try:
+        writer, result = _in_thread(_call, server, "POST", "/cypher", create)
+        reads = [
+            ("POST", "/query", {"label": "Nation", "property": "n_nationkey", "value": 3}),
+            ("POST", "/search", {"q": "machinery", "labels": ["Customer"]}),
+            ("POST", "/cypher", {"query": "MATCH (n:Nation) WHERE n.n_regionkey = 1 "
+                                          "RETURN n.n_name AS name"}),
+            ("GET", f"/nodes/{label_base('Customer') + 1}", None),
+            ("GET", f"/nodes/{label_base('Customer') + 1}/neighbors", None),
+        ]
+        for method, path, body in reads:
+            status, out = _call(server, method, path, body, READ_TIMEOUT_S)
+            assert status == 200 and out["rows"], path
+        assert writer.is_alive(), result
+        assert _call(server, "POST", "/query", lockland, READ_TIMEOUT_S)[1]["rows"] == []
+    finally:
+        server._lock.release()
+    writer.join(READ_TIMEOUT_S)
+    assert result == {"result": (200, {"ok": True})}
+    assert len(_call(server, "POST", "/query", lockland)[1]["rows"]) == 1
+
+
+def test_concurrent_cypher_creates_lose_no_update(server):
+    """Concurrent Cypher CREATEs (more writer threads than a small box has
+    cores, with frequent thread switches) all land: none compiles against
+    a graph another writer is about to replace."""
+    import sys
+
+    writers_n = 6
+    _, before = _call(server, "GET", "/stats")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        writers = [
+            _in_thread(_call, server, "POST", "/cypher", {
+                "query": f"CREATE (n:Nation {{n_name: 'RACE{i}', n_regionkey: 0}})"})
+            for i in range(writers_n)
+        ]
+        for t, result in writers:
+            t.join(READ_TIMEOUT_S)
+            assert result == {"result": (200, {"ok": True})}
+    finally:
+        sys.setswitchinterval(interval)
+    _, after = _call(server, "GET", "/stats")
+    assert after["nodes"]["Nation"] == before["nodes"]["Nation"] + writers_n
+
+
+# -- /neighbors: one scan per edge set ------------------------------------------
+
+def _two_branch_neighbors(g, node_id):
+    """The earlier form of the route: one filtered scan per direction."""
+    from pyspark.sql import functions as F
+
+    parts = []
+    for rt, es in g.edges.items():
+        parts.append(es.df.filter(F.col("src") == node_id).select(
+            F.col("dst").alias("id"), F.lit(rt).alias("rel_type"),
+            F.lit("out").alias("direction")))
+        parts.append(es.df.filter(F.col("dst") == node_id).select(
+            F.col("src").alias("id"), F.lit(rt).alias("rel_type"),
+            F.lit("in").alias("direction")))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("rel_type", "direction", "id")
+
+
+def test_neighbors_match_two_branch_form(server):
+    from rs_graphdb_spark.graph import label_base
+    from rs_graphdb_spark.sources.http_server import _neighbors
+
+    _call(server, "POST", "/batch/nodes", {"nodes": [
+        {"labels": ["Widget"], "properties": {"id": 900020, "name": "hub"}},
+        {"labels": ["Widget"], "properties": {"id": 900021, "name": "spoke"}},
+    ]})
+    for eid, src, dst in ((990020, 900020, 900021), (990021, 900021, 900020)):
+        _call(server, "POST", "/rels", {
+            "rel_type": "WIRED", "edge_id": eid, "src": src, "dst": dst})
+    g = server.graph
+    ids = [label_base("Order") + 5, label_base("Customer") + 19,
+           label_base("Part") + 3, label_base("Supplier") + 1, 900020]
+    for node_id in ids:
+        want = [r.asDict() for r in _two_branch_neighbors(g, node_id).collect()]
+        got = [r.asDict() for r in _neighbors(g, node_id).collect()]
+        assert want, node_id
+        assert got == want, node_id
+    assert _call(server, "GET", "/nodes/900020/neighbors")[1]["rows"] == [
+        {"id": 900021, "rel_type": "WIRED", "direction": "in"},
+        {"id": 900021, "rel_type": "WIRED", "direction": "out"},
+    ]
+
+
+def test_neighbors_self_loop_is_both_out_and_in(server):
+    _call(server, "POST", "/nodes", {
+        "labels": ["Widget"], "properties": {"id": 900030, "name": "loop"}})
+    _call(server, "POST", "/rels", {
+        "rel_type": "LOOPS", "edge_id": 990030, "src": 900030, "dst": 900030})
+    rows = _call(server, "GET", "/nodes/900030/neighbors")[1]["rows"]
+    assert rows == [
+        {"id": 900030, "rel_type": "LOOPS", "direction": "in"},
+        {"id": 900030, "rel_type": "LOOPS", "direction": "out"},
+    ]
+
+
+def test_neighbors_plan_scans_each_edge_set_once(spark):
+    from rs_graphdb_spark.graph import label_base
+    from rs_graphdb_spark.sources.http_server import _neighbors
+
+    def leaves(df):
+        return df._jdf.queryExecution().optimizedPlan().collectLeaves().size()
+
+    g = load_tpch_graph(spark, SF)
+    per_set = sum(leaves(es.df) for es in g.edges.values())
+    node_id = label_base("Customer") + 19
+    assert leaves(_neighbors(g, node_id)) == per_set
+    assert leaves(_two_branch_neighbors(g, node_id)) == 2 * per_set
