@@ -6,10 +6,10 @@ DataFrame-Pregel / canonical-edge joins, never adjacency HashMaps.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rs_graphdb_spark.algorithms.pregel import CHECKPOINT_EVERY
+from rs_graphdb_spark.algorithms.pregel import pregel
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -23,6 +23,22 @@ def _undirected(edges: DataFrame) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
+
+
+def _rank_update(teleport: Column, damping: float):
+    """PageRank-family ``pregel`` update: rank = teleport + d·Σ msgs."""
+
+    def update(vs: DataFrame, msgs: DataFrame) -> DataFrame:
+        return (
+            vs.drop("rank")
+            .join(msgs, "id", "left")
+            .withColumn(
+                "rank", teleport + F.lit(damping) * F.coalesce("agg", F.lit(0.0))
+            )
+            .drop("agg")
+        )
+
+    return update
 
 
 def pagerank(
@@ -40,8 +56,8 @@ def pagerank(
     rank · w / Σw_out(src) instead of rank / out_deg (the unweighted code
     path is untouched — identical arithmetic, identical oracle hashes).
 
-    One shuffle per superstep (the groupBy(dst)); out-degrees precomputed
-    once and joined broadcast-style when small.
+    Runs on ``pregel``: one shuffle per superstep (the groupBy(dst));
+    out-degrees precomputed once and carried in the vertex state.
     """
     n = nodes.count()
     if weight_col is not None:
@@ -72,29 +88,11 @@ def pagerank(
         .withColumn("rank", F.lit(1.0 / n))
         .localCheckpoint(eager=True)
     )
-    base = (1.0 - damping) / n
-    for i in range(iterations):
-        msg_val = (
-            (F.col("rank") * F.col("_w") / F.col("out_deg"))
-            if weight_col is not None
-            else (F.col("rank") / F.col("out_deg"))
-        )
-        msgs = (
-            state.join(edges, state["id"] == edges["src"])
-            .select(F.col("dst").alias("id"), msg_val.alias("msg"))
-            .groupBy("id")
-            .agg(F.sum("msg").alias("in_sum"))
-        )
-        state = (
-            state.drop("rank")
-            .join(msgs, "id", "left")
-            .withColumn(
-                "rank", F.lit(base) + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-            )
-            .drop("in_sum")
-        )
-        if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
-            state = state.localCheckpoint(eager=True)
+    msg = F.col("rank") / F.col("out_deg")
+    if weight_col is not None:
+        msg = F.col("rank") * F.col("_w") / F.col("out_deg")
+    state = pregel(state, edges, msg, F.sum,
+                   _rank_update(F.lit((1.0 - damping) / n), damping), iterations)
     total = state.agg(F.sum("rank")).first()[0]
     return state.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
 
@@ -293,24 +291,23 @@ def k_core(nodes: DataFrame, edges: DataFrame, k: int, max_iter: int = 100
     repeatedly drop nodes with undirected degree < k. Returns surviving
     (id, degree) where degree is within the core."""
     und = _undirected(edges).localCheckpoint(eager=True)
-    alive = nodes.select("id").localCheckpoint(eager=True)
-    for i in range(max_iter):
-        live_edges = (
-            und.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
+    alive = nodes.select(
+        "id", F.lit(None).cast("long").alias("degree")
+    ).localCheckpoint(eager=True)
+
+    def peel(vs: DataFrame, msgs: DataFrame) -> DataFrame:
+        # msgs.agg = number of live neighbors (und is symmetric)
+        return (
+            vs.join(msgs, "id", "left")
+            .filter(F.coalesce("agg", F.lit(0)) >= k)
+            .select("id", F.col("agg").alias("degree"))
         )
-        deg = live_edges.groupBy("src").agg(F.count("*").alias("degree"))
-        survivors = (
-            alive.join(deg, alive["id"] == deg["src"], "left")
-            .filter(F.coalesce("degree", F.lit(0)) >= k)
-            .select("id", "degree")
-            .localCheckpoint(eager=True)
-        )
-        n_alive, n_surv = alive.count(), survivors.count()
-        alive = survivors.select("id")
-        if n_surv == n_alive or n_surv == 0:
-            return survivors
-    return survivors
+
+    def stable(old: DataFrame, new: DataFrame) -> bool:
+        n_new = new.count()
+        return n_new == old.count() or n_new == 0
+
+    return pregel(alive, und, F.lit(1), F.count, peel, max_iter, stable)
 
 
 def label_propagation(
@@ -319,32 +316,19 @@ def label_propagation(
     """Community detection by synchronous label propagation — the
     reference's "Louvain" is exactly this greedy neighbor-majority move
     with no modularity term (`src/algorithms/louvain.rs:6-86`).
-    Deterministic tie-break: (count desc, label asc). Returns
-    (id, community)."""
+    Deterministic tie-break: (count desc, label asc) — ``F.mode`` with
+    ``deterministic=True`` returns the lowest of the most frequent labels.
+    Returns (id, community)."""
     und = _undirected(edges).localCheckpoint(eager=True)
     labels = nodes.select("id").withColumn("community", F.col("id")).localCheckpoint(
         eager=True
     )
-    for i in range(iterations):
-        votes = (
-            labels.join(und, labels["id"] == und["src"])
-            .groupBy(F.col("dst").alias("id"), F.col("community"))
-            .agg(F.count("*").alias("n"))
-        )
-        # majority label; tie-break = smallest label (max over (n, -label))
-        best = votes.groupBy("id").agg(
-            F.max(F.struct(F.col("n"), (-F.col("community")).alias("neg"))).alias("_b")
-        ).select("id", (-F.col("_b.neg")).alias("new_community"))
-        labels = (
-            labels.join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce("new_community", F.col("community")).alias("community"),
-            )
-        )
-        if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+    return pregel(
+        labels, und, F.col("community"), lambda c: F.mode(c, True),
+        lambda vs, msgs: vs.join(msgs, "id", "left").select(
+            "id", F.coalesce("agg", "community").alias("community")),
+        iterations,
+    )
 
 
 def strongly_connected_components(
@@ -696,28 +680,8 @@ def personalized_pagerank(
         .withColumn("rank", F.col("p"))
         .localCheckpoint(eager=True)
     )
-    d = damping
-    for i in range(iterations):
-        msgs = (
-            state.join(edges, state["id"] == edges["src"])
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("out_deg")).alias("msg"),
-            )
-            .groupBy("id")
-            .agg(F.sum("msg").alias("in_sum"))
-        )
-        state = (
-            state.drop("rank")
-            .join(msgs, "id", "left")
-            .withColumn(
-                "rank",
-                (1.0 - d) * F.col("p") + d * F.coalesce("in_sum", F.lit(0.0)),
-            )
-            .drop("in_sum")
-        )
-        if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
-            state = state.localCheckpoint(eager=True)
+    state = pregel(state, edges, F.col("rank") / F.col("out_deg"), F.sum,
+                   _rank_update((1.0 - damping) * F.col("p"), damping), iterations)
     total = state.agg(F.sum("rank")).first()[0] or 1.0
     return state.select("id", (F.col("rank") / total).alias("rank"))
 

@@ -764,17 +764,19 @@ def ngram_jaccard_pairs(
 
         caps.append(max(100, math.ceil(max_shingle_df_frac * stats["n"])))
     cap = min(caps) if caps else None
+    # the dtype conjunct comes first: lo/hi of a string id column are
+    # strings, which the int() bounds below cannot parse
     packable = (
         engine != "legacy"
         and not prefix_filter
         and stats is not None
+        and dict(sets_df.dtypes).get("doc_id", "").startswith(
+            ("bigint", "int", "smallint", "tinyint"))
         and stats["lo"] is not None
         and stats["nn"] == stats["n"]
         and int(stats["lo"]) >= 0
         and int(stats["hi"]) < (1 << 31)
         and int(stats["mx"] or 0) < (1 << 21)
-        and dict(sets_df.dtypes).get("doc_id", "").startswith(
-            ("bigint", "int", "smallint", "tinyint"))
     )
     if engine == "auto" and packable and (
             int(stats["postings"] or 0) < _NGRAM_PACKED_MIN_POSTINGS):

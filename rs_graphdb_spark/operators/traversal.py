@@ -20,14 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rs_graphdb_spark.algorithms.pregel import CHECKPOINT_EVERY
 from rs_graphdb_spark.graph import PropertyGraph
-
-CHECKPOINT_EVERY = 5
 
 #: bounded expansions at or below this depth compose one lazy plan (no
 #: per-level checkpoints / emptiness probes — see `expand`); deeper or
-#: unbounded expansions keep the eager loop whose checkpoints bound
-#: lineage and whose emptiness test terminates the fixpoint.
+#: unbounded expansions run the eager `bfs_distances` loop.
 _LAZY_MAX_HOPS = 3
 
 
@@ -99,47 +97,13 @@ def expand(
         out_label = dst_label if (min_hops > 0 or homogeneous) else None
         return result.dropDuplicates(["id"]), out_label
 
-    # Materialize the edge list once: derived edge sets (windows, joins)
-    # must not be recomputed every BFS level. At cluster scale this is a
-    # persist(MEMORY_AND_DISK); localCheckpoint also truncates lineage.
-    edges = edges.localCheckpoint(eager=True)
-
-    start = frontier_ids.select("id").dropDuplicates(["id"]).localCheckpoint(
-        eager=True
-    )
-    visited = start
-    current = start
-    result: DataFrame | None = start if min_hops == 0 else None
-
-    depth = 0
-    while max_hops is None or depth < max_hops:
-        depth += 1
-        # Each level is checkpointed: it's read ≥3× (emptiness test, next
-        # level's join, visited union) and lineage would otherwise grow
-        # linearly with depth.
-        nxt = (
-            current.join(edges, current["id"] == edges["src"])
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
-            .join(visited, "id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        if depth % CHECKPOINT_EVERY == 0:
-            visited = visited.localCheckpoint(eager=True)
-        if depth >= min_hops:
-            result = nxt if result is None else result.unionByName(nxt)
-        current = nxt
-        # heterogeneous single-rel chains exhaust after one hop
-        if not homogeneous:
-            break
-
-    if result is None:
-        result = start.limit(0)
+    # Deeper or unbounded: the eager BFS loop, whose per-level checkpoints
+    # bound lineage and whose emptiness test terminates the fixpoint.
+    # Heterogeneous single-rel chains exhaust after one hop.
+    dists = bfs_distances(graph, frontier_ids, rel_type, direction,
+                          max_hops if homogeneous else 1)
     out_label = dst_label if (min_hops > 0 or homogeneous) else None
-    return result.dropDuplicates(["id"]), out_label
+    return dists.filter(F.col("dist") >= min_hops).select("id"), out_label
 
 
 def bfs_distances(

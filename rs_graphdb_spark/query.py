@@ -187,19 +187,7 @@ class Query:
         the TPC-H projection's edge sets are label-homogeneous) joined back
         to their node table. Delegates to operators.traversal.expand.
         """
-        from rs_graphdb_spark.operators.traversal import expand
-
-        ids, dst_label = expand(
-            self.graph, self.frontier.select("id"), rel_type,
-            min_hops=min_hops, max_hops=max_hops, direction="out",
-        )
-        if dst_label is None:
-            return replace(self, frontier=ids, label=None,
-                           hop_frontier=None)
-        return replace(self,
-                       frontier=ids.join(self.graph.nodes[dst_label], "id"),
-                       label=dst_label, hop_frontier=ids
-                       if self.graph.edge_integrity else None)
+        return self._variable_length(rel_type, min_hops, max_hops, "out")
 
     def _variable_length(self, rel_type: str, min_hops: int,
                          max_hops: int | None, direction: str) -> "Query":

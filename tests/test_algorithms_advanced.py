@@ -246,3 +246,291 @@ def test_weighted_pagerank_rejects_bad_weights(spark):
         )
         with pytest.raises(ValueError, match="strictly positive"):
             pagerank(nodes, edges, 0.85, 2, weight_col="w")
+
+
+# ---------------------------------------------------------------------------
+# pregel()/bfs_distances ports ≡ the hand-written loops they replaced.
+# The ``_old_*`` functions are verbatim copies of the deleted loops.
+# ---------------------------------------------------------------------------
+
+_OLD_CHECKPOINT_EVERY = 5
+
+
+def _old_pagerank(nodes, edges, damping, iterations, weight_col=None):
+    n = nodes.count()
+    if weight_col is not None:
+        edges = edges.select(
+            "src", "dst", F.col(weight_col).cast("double").alias("_w")
+        ).localCheckpoint(eager=True)
+        out_deg = edges.groupBy("src").agg(F.sum("_w").alias("out_deg"))
+    else:
+        edges = edges.select("src", "dst").localCheckpoint(eager=True)
+        out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    state = (
+        nodes.select("id")
+        .join(out_deg, nodes["id"] == out_deg["src"], "left")
+        .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+        .withColumn("rank", F.lit(1.0 / n))
+        .localCheckpoint(eager=True)
+    )
+    base = (1.0 - damping) / n
+    for i in range(iterations):
+        msg_val = (
+            (F.col("rank") * F.col("_w") / F.col("out_deg"))
+            if weight_col is not None
+            else (F.col("rank") / F.col("out_deg"))
+        )
+        msgs = (
+            state.join(edges, state["id"] == edges["src"])
+            .select(F.col("dst").alias("id"), msg_val.alias("msg"))
+            .groupBy("id")
+            .agg(F.sum("msg").alias("in_sum"))
+        )
+        state = (
+            state.drop("rank")
+            .join(msgs, "id", "left")
+            .withColumn(
+                "rank", F.lit(base) + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
+            )
+            .drop("in_sum")
+        )
+        if (i + 1) % _OLD_CHECKPOINT_EVERY == 0 or i == iterations - 1:
+            state = state.localCheckpoint(eager=True)
+    total = state.agg(F.sum("rank")).first()[0]
+    return state.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
+
+
+def _old_personalized_pagerank(nodes, edges, source_ids, damping, iterations):
+    n_src = source_ids.count()
+    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    teleport = source_ids.select("id").withColumn("p", F.lit(1.0 / n_src))
+    state = (
+        nodes.select("id")
+        .join(out_deg, nodes["id"] == out_deg["src"], "left")
+        .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+        .join(teleport, "id", "left")
+        .withColumn("p", F.coalesce("p", F.lit(0.0)))
+        .withColumn("rank", F.col("p"))
+        .localCheckpoint(eager=True)
+    )
+    d = damping
+    for i in range(iterations):
+        msgs = (
+            state.join(edges, state["id"] == edges["src"])
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("rank") / F.col("out_deg")).alias("msg"),
+            )
+            .groupBy("id")
+            .agg(F.sum("msg").alias("in_sum"))
+        )
+        state = (
+            state.drop("rank")
+            .join(msgs, "id", "left")
+            .withColumn(
+                "rank",
+                (1.0 - d) * F.col("p") + d * F.coalesce("in_sum", F.lit(0.0)),
+            )
+            .drop("in_sum")
+        )
+        if (i + 1) % _OLD_CHECKPOINT_EVERY == 0 or i == iterations - 1:
+            state = state.localCheckpoint(eager=True)
+    total = state.agg(F.sum("rank")).first()[0] or 1.0
+    return state.select("id", (F.col("rank") / total).alias("rank"))
+
+
+def _old_k_core(nodes, edges, k, max_iter=100):
+    from rs_graphdb_spark.algorithms.graph_algos import _undirected
+
+    und = _undirected(edges).localCheckpoint(eager=True)
+    alive = nodes.select("id").localCheckpoint(eager=True)
+    for i in range(max_iter):
+        live_edges = (
+            und.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
+        )
+        deg = live_edges.groupBy("src").agg(F.count("*").alias("degree"))
+        survivors = (
+            alive.join(deg, alive["id"] == deg["src"], "left")
+            .filter(F.coalesce("degree", F.lit(0)) >= k)
+            .select("id", "degree")
+            .localCheckpoint(eager=True)
+        )
+        n_alive, n_surv = alive.count(), survivors.count()
+        alive = survivors.select("id")
+        if n_surv == n_alive or n_surv == 0:
+            return survivors
+    return survivors
+
+
+def _old_label_propagation(nodes, edges, iterations):
+    from rs_graphdb_spark.algorithms.graph_algos import _undirected
+
+    und = _undirected(edges).localCheckpoint(eager=True)
+    labels = nodes.select("id").withColumn("community", F.col("id")).localCheckpoint(
+        eager=True
+    )
+    for i in range(iterations):
+        votes = (
+            labels.join(und, labels["id"] == und["src"])
+            .groupBy(F.col("dst").alias("id"), F.col("community"))
+            .agg(F.count("*").alias("n"))
+        )
+        best = votes.groupBy("id").agg(
+            F.max(F.struct(F.col("n"), (-F.col("community")).alias("neg"))).alias("_b")
+        ).select("id", (-F.col("_b.neg")).alias("new_community"))
+        labels = (
+            labels.join(best, "id", "left")
+            .select(
+                "id",
+                F.coalesce("new_community", F.col("community")).alias("community"),
+            )
+        )
+        if (i + 1) % _OLD_CHECKPOINT_EVERY == 0 or i == iterations - 1:
+            labels = labels.localCheckpoint(eager=True)
+    return labels
+
+
+def _old_expand(graph, frontier_ids, rel_type, min_hops, max_hops, direction):
+    from rs_graphdb_spark.operators.traversal import _edges_for
+
+    edges, dst_label = _edges_for(graph, rel_type, direction)
+    es = graph.edges[rel_type]
+    homogeneous = es.src_label == es.dst_label
+    edges = edges.localCheckpoint(eager=True)
+    start = frontier_ids.select("id").dropDuplicates(["id"]).localCheckpoint(
+        eager=True
+    )
+    visited = start
+    current = start
+    result = start if min_hops == 0 else None
+    depth = 0
+    while max_hops is None or depth < max_hops:
+        depth += 1
+        nxt = (
+            current.join(edges, current["id"] == edges["src"])
+            .select(F.col("dst").alias("id"))
+            .dropDuplicates(["id"])
+            .join(visited, "id", "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        visited = visited.unionByName(nxt)
+        if depth % _OLD_CHECKPOINT_EVERY == 0:
+            visited = visited.localCheckpoint(eager=True)
+        if depth >= min_hops:
+            result = nxt if result is None else result.unionByName(nxt)
+        current = nxt
+        if not homogeneous:
+            break
+    if result is None:
+        result = start.limit(0)
+    out_label = dst_label if (min_hops > 0 or homogeneous) else None
+    return result.dropDuplicates(["id"]), out_label
+
+
+def _random_graph(spark, seed, base, n=24, m=48):
+    """Seeded random multigraph (self-loops and duplicate edges included)
+    over ids base..base+n-1, with strictly positive weights."""
+    import random
+
+    from rs_graphdb_spark.session import local_df
+
+    rng = random.Random(seed)
+    ids = [base + i for i in range(n)]
+    rows = [(rng.choice(ids), rng.choice(ids), rng.uniform(0.1, 3.0))
+            for _ in range(m)]
+    nodes = local_df(spark, [(i,) for i in ids], "id long")
+    edges = local_df(spark, rows, "src long, dst long, w double")
+    return nodes, edges
+
+
+def _parity_graphs(spark):
+    """(name, nodes, edges): random graphs with ids from 0, from −50 and
+    from 2³³; an empty edge set; a 6-ring where every vertex ties."""
+    from rs_graphdb_spark.session import local_df
+
+    out = [(f"random@{base}", *_random_graph(spark, seed, base))
+           for seed, base in ((1, 0), (2, -50), (3, 1 << 33))]
+    out.append(("empty", local_df(spark, [(i,) for i in range(5)], "id long"),
+                local_df(spark, [], "src long, dst long, w double")))
+    ring = [(i, (i + 1) % 6, 1.0) for i in range(6)]
+    out.append(("ring", local_df(spark, [(i,) for i in range(6)], "id long"),
+                local_df(spark, ring, "src long, dst long, w double")))
+    return out
+
+
+def _ranks_close(new, old):
+    a = {r["id"]: r["rank"] for r in new.collect()}
+    b = {r["id"]: r["rank"] for r in old.collect()}
+    assert a.keys() == b.keys()
+    for i, x in a.items():
+        assert abs(x - b[i]) <= 1e-12 * max(abs(b[i]), 1e-300), (i, x, b[i])
+
+
+def test_pregel_pagerank_family_matches_old_loops(spark):
+    from rs_graphdb_spark.algorithms.graph_algos import (
+        pagerank, personalized_pagerank)
+
+    for name, nodes, edges in _parity_graphs(spark):
+        # 6 supersteps cross the CHECKPOINT_EVERY boundary
+        _ranks_close(pagerank(nodes, edges, 0.85, 6),
+                     _old_pagerank(nodes, edges, 0.85, 6))
+        if name != "empty":
+            _ranks_close(pagerank(nodes, edges, 0.85, 6, weight_col="w"),
+                         _old_pagerank(nodes, edges, 0.85, 6, weight_col="w"))
+        seeds = nodes.orderBy("id").limit(2)
+        _ranks_close(personalized_pagerank(nodes, edges, seeds, 0.85, 6),
+                     _old_personalized_pagerank(nodes, edges, seeds, 0.85, 6))
+
+
+def test_pregel_label_propagation_and_k_core_match_old_loops(spark):
+    from rs_graphdb_spark.algorithms.graph_algos import (
+        k_core, label_propagation)
+
+    def rows(df, *cols):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    graphs = _parity_graphs(spark)
+    for name, nodes, edges in graphs:
+        for iters in (1, 3):
+            assert (rows(label_propagation(nodes, edges, iters), "id", "community")
+                    == rows(_old_label_propagation(nodes, edges, iters),
+                            "id", "community")), (name, iters)
+        # k=2 keeps a core; k=10 peels every vertex (empty core)
+        for k in (2, 10):
+            new = rows(k_core(nodes, edges, k), "id", "degree")
+            assert new == rows(_old_k_core(nodes, edges, k), "id", "degree"), (
+                name, k)
+            if k == 10:
+                assert new == []
+    # every ring vertex ties between its two neighbors: lowest label wins
+    _, ring_nodes, ring_edges = graphs[-1]
+    got = dict(rows(label_propagation(ring_nodes, ring_edges, 1), "id", "community"))
+    assert got == {0: 1, 1: 0, 2: 1, 3: 2, 4: 3, 5: 0}
+
+
+def test_expand_on_bfs_distances_matches_old_loop(spark):
+    from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+    from rs_graphdb_spark.operators.traversal import expand
+
+    for seed, base in ((4, 0), (5, -50), (6, 1 << 33)):
+        nodes, edges = _random_graph(spark, seed, base, n=20, m=26)
+        g = PropertyGraph(
+            nodes={"N": nodes, "M": nodes},
+            edges={"E": EdgeSet(df=edges.select("src", "dst"), src_label="N",
+                                dst_label="N"),
+                   "H": EdgeSet(df=edges.select("src", "dst"), src_label="N",
+                                dst_label="M")})
+        start = nodes.orderBy("id").limit(2)
+        cases = [("E", d, mn, mx) for d in ("out", "in", "both")
+                 for mn, mx in ((0, None), (2, None), (1, 5))]
+        cases += [("H", "out", mn, mx) for mn, mx in ((0, None), (1, 4), (2, 6))]
+        for rel, d, mn, mx in cases:
+            new, new_label = expand(g, start, rel, mn, mx, d)
+            old, old_label = _old_expand(g, start, rel, mn, mx, d)
+            assert new_label == old_label
+            assert (sorted(r["id"] for r in new.collect())
+                    == sorted(r["id"] for r in old.collect())), (seed, rel, d, mn, mx)

@@ -23,19 +23,30 @@ from rs_graphdb_spark.functions.similarity import pq_train as _pq_train_raw
 #: the RAW trainer for its second build), so identical (frame, args)
 #: yield identical books and one distributed training per distinct
 #: configuration serves the whole module.
+#:
+#: Only the module-scoped fixture frames are memoized, keyed by fixture
+#: name: an ``id(df)`` key can be reused by CPython for a later frame
+#: once the first is garbage-collected. The fixtures register here; the
+#: dict keeps each frame alive, so the identity match below is exact.
+_fixture_frames: dict = {}
 _books_memo: dict = {}
+_cents_memo: dict = {}
+
+
+def _fixture_name(df):
+    return next((n for n, f in _fixture_frames.items() if f is df), None)
 
 
 def pq_train(df, id_col, vec_col, **kw):
+    name = _fixture_name(df)
+    if name is None:
+        return _pq_train_raw(df, id_col, vec_col, **kw)
     # repr-keyed: kwargs may carry (deterministic) nested float lists
     # (residual_centroids), which are unhashable but repr-stable
-    key = (id(df), id_col, vec_col, repr(sorted(kw.items())))
+    key = (name, id_col, vec_col, repr(sorted(kw.items())))
     if key not in _books_memo:
         _books_memo[key] = _pq_train_raw(df, id_col, vec_col, **kw)
     return _books_memo[key]
-
-
-_cents_memo: dict = {}
 
 
 def _cents(df, id_col, vec_col, k, iters):
@@ -43,7 +54,10 @@ def _cents(df, id_col, vec_col, k, iters):
     budget rationale as the pq_train wrapper; Lloyd is deterministic)."""
     from rs_graphdb_spark.functions.similarity import ivf_centroids
 
-    key = (id(df), id_col, vec_col, k, iters)
+    name = _fixture_name(df)
+    if name is None:
+        return ivf_centroids(df, id_col, vec_col, k, iters)
+    key = (name, id_col, vec_col, k, iters)
     if key not in _cents_memo:
         _cents_memo[key] = ivf_centroids(df, id_col, vec_col, k, iters)
     return _cents_memo[key]
@@ -65,9 +79,11 @@ def _clustered_vectors(n=240, dim=32, n_clusters=12, noise=0.05):
 
 @pytest.fixture(scope="module")
 def clustered(spark):
-    return local_df(spark, 
+    df = local_df(spark, 
         _clustered_vectors(), "vec_id long, v array<double>"
     ).cache()
+    _fixture_frames["clustered"] = df
+    return df
 
 
 def test_pq_train_shapes_and_determinism(clustered):
@@ -735,8 +751,10 @@ def _strong_clusters(n=200, dim=16, n_clusters=6, spread=5.0, noise=0.3):
 
 @pytest.fixture(scope="module")
 def strong(spark):
-    return local_df(spark, 
+    df = local_df(spark, 
         _strong_clusters(), "vec_id long, v array<double>").cache()
+    _fixture_frames["strong"] = df
+    return df
 
 
 def _res_setup(strong):

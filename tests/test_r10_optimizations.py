@@ -107,16 +107,21 @@ def test_lazy_expand_matches_eager(spark):
     import rs_graphdb_spark.operators.traversal as trav
     from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
 
-    edges = local_df(
-        spark,
-        [(i, i + 1) for i in range(50)] + [(10, 40), (40, 12), (3, 3)],
-        "src long, dst long")
+    pairs = [(i, i + 1) for i in range(50)] + [(10, 40), (40, 12), (3, 3)]
+    edges = local_df(spark, pairs, "src long, dst long")
     nodes = local_df(spark, [(i,) for i in range(60)], "id long")
     g = PropertyGraph(nodes={"N": nodes},
                       edges={"E": EdgeSet(df=edges, src_label="N",
                                           dst_label="N")})
     start = local_df(spark, [(3,), (10,)], "id long")
-    for mn, mx in ((1, 2), (0, 3), (2, 2), (1, 1)):
+    # expected answer: driver-side BFS distances from the start set
+    dist, level, depth = {3: 0, 10: 0}, {3, 10}, 0
+    while level:
+        depth += 1
+        level = {b for a, b in pairs if a in level and b not in dist}
+        dist.update((b, depth) for b in level)
+    for mn, mx in ((1, 2), (0, 3), (2, 2), (1, 1), (0, None), (2, None),
+                   (1, 5)):
         lazy, _ = trav.expand(g, start, "E", mn, mx, "out")
         old = trav._LAZY_MAX_HOPS
         trav._LAZY_MAX_HOPS = -1
@@ -124,8 +129,10 @@ def test_lazy_expand_matches_eager(spark):
             eager, _ = trav.expand(g, start, "E", mn, mx, "out")
         finally:
             trav._LAZY_MAX_HOPS = old
-        assert (sorted(r["id"] for r in lazy.collect())
-                == sorted(r["id"] for r in eager.collect())), (mn, mx)
+        want = sorted(i for i, d in dist.items()
+                      if d >= mn and (mx is None or d <= mx))
+        assert sorted(r["id"] for r in lazy.collect()) == want, (mn, mx)
+        assert sorted(r["id"] for r in eager.collect()) == want, (mn, mx)
 
 
 def test_hop_narrow_frame_count_equals_joined_count(spark, graph):

@@ -255,3 +255,21 @@ def test_ngram_packed_engine_bit_equals_legacy(spark):
         rows(ngram_jaccard_pairs(neg, "doc_id", "text", engine="legacy"))
     with pytest.raises(ValueError, match="packed-route"):
         ngram_jaccard_pairs(neg, "doc_id", "text", engine="packed")
+
+
+def test_ngram_auto_route_accepts_string_ids(spark):
+    """engine='auto' must check the id dtype before parsing the id
+    bounds as integers: string doc ids route to the legacy form and give
+    its pairs instead of raising ValueError."""
+    from rs_graphdb_spark.functions.dedup import ngram_jaccard_pairs
+
+    docs = local_df(spark, [("doc-a", "a b c d e f"), ("doc-b", "a b c d e")],
+                    "doc_id string, text string")
+
+    def rows(out):
+        return sorted((r["a"], r["b"], r["jaccard"]) for r in out.collect())
+
+    auto = rows(ngram_jaccard_pairs(docs, "doc_id", "text"))
+    assert auto == rows(ngram_jaccard_pairs(docs, "doc_id", "text",
+                                            engine="legacy"))
+    assert auto == [("doc-a", "doc-b", 0.75)]

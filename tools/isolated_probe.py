@@ -5,7 +5,9 @@ and new trees in back-to-back windows on the same box).
 
 Usage: python tools/isolated_probe.py [passes] q44_minhash_lsh_dedup ...
 Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS (cores).
-Prints one JSON line: {query: {"passes": [...], "min": s, "calib": [...]}}.
+Prints one JSON line: {query: {"passes": [...], "min": s, "calib": [...]}};
+``n_jobs``/``n_stages`` are summed over the accepted passes. Exits with an
+error after ``MAX_GATE_REJECTS`` consecutive steal-gate rejections.
 """
 from __future__ import annotations
 
@@ -15,6 +17,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+#: consecutive steal-gate rejections before the probe gives up on a host
+#: that stays contaminated (each rejection sleeps 2 s)
+MAX_GATE_REJECTS = 60
 
 
 def _calib1(n: int = 2_000_000) -> float:
@@ -51,12 +57,19 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"warm {name}")
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         ts, cal, accepted = [], [], []
-        p = 0
+        n_jobs = n_stages = 0
+        p = rejects = 0
         while p < max(passes, 8):
             c0 = _calib1()
             if c0 >= bad:
+                rejects += 1
+                if rejects >= MAX_GATE_REJECTS:
+                    raise SystemExit(
+                        f"isolated_probe: {name}: {rejects} consecutive "
+                        f"calibration samples over the gate {bad} s")
                 time.sleep(2.0)
                 continue
+            rejects = 0
             sc = spark.sparkContext
             group = f"{name}-pass{p}"
             sc.setJobGroup(group, name)
@@ -67,24 +80,24 @@ def main() -> None:
             sc.setJobGroup(None, None)
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(group)
-            n_stages = 0
-            for jid in job_ids:
-                info = tracker.getJobInfo(jid)
-                if info is not None:
-                    n_stages += len(info.stageIds)
             c1 = _calib1()
             ts.append(t)
             cal.append([c0, c1])
             p += 1
             if max(c0, c1) < bad:
                 accepted.append(t)
+                n_jobs += len(job_ids)
+                for jid in job_ids:
+                    info = tracker.getJobInfo(jid)
+                    if info is not None:
+                        n_stages += len(info.stageIds)
                 s = sorted(accepted)
                 if len(s) >= 2 and s[1] <= 1.10 * s[0] and p >= passes:
                     break
         best = min(accepted) if accepted else min(ts)
         out[name] = {"passes": ts, "accepted": accepted, "min": best,
                      "calib": cal, "gate": bad,
-                     "n_jobs": len(job_ids), "n_stages": n_stages}
+                     "n_jobs": n_jobs, "n_stages": n_stages}
         print(json.dumps({name: out[name]}), flush=True)
     print("RESULT " + json.dumps(out))
 
