@@ -18,12 +18,16 @@ loops driver-side (same machinery as operators/traversal.py).
 
 from __future__ import annotations
 
+from dataclasses import replace as dc_replace
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.cypher import ast
 from rs_graphdb_spark.cypher.parser import parse_cypher
-from rs_graphdb_spark.graph import PropertyGraph
+from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.operators import dml
+from rs_graphdb_spark.session import local_df
 
 
 class CypherCompileError(ValueError):
@@ -34,9 +38,27 @@ def _pref(var: str, col: str) -> str:
     return f"{var}__{col}"
 
 
+def _match_cond(df: DataFrame, props) -> Column:
+    """AND of ``col == lit`` over pattern props. A key the table has never
+    seen matches nothing (reference partial-match scenario
+    `merge_comprehensive_test.rs:410-430`)."""
+    cond = F.lit(True)
+    for k, v in props:
+        cond = cond & ((F.col(k) == F.lit(v)) if k in df.columns else F.lit(False))
+    return cond
+
+
+def _lits(updates) -> dict[str, Column]:
+    return {k: F.lit(v) for k, v in updates}
+
+
 class Compiler:
     def __init__(self, graph: PropertyGraph):
         self.g = graph
+
+    def _copy(self) -> PropertyGraph:
+        """A write's output graph: fresh catalogs over the same tables."""
+        return PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
 
     # -- pattern compilation --------------------------------------------
     def _node_df(self, np: ast.NodePattern, label_hint: str | None) -> tuple[DataFrame, str]:
@@ -379,15 +401,13 @@ class Compiler:
         edges that already existed. Idempotent."""
         from pyspark.sql import Window
 
-        from rs_graphdb_spark.graph import EdgeSet
-
         if len(stmt.path.hops) > 1:
             return self._run_merge_path(stmt)
         (rel, dst_node) = stmt.path.hops[0]
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+        g = self._copy()
         if rel.rel_type in g.edges:
             es = g.edges[rel.rel_type]
         else:
@@ -396,8 +416,6 @@ class Compiler:
                     f"new relationship type {rel.rel_type!r} needs labeled "
                     "endpoint patterns to declare its endpoints"
                 )
-            from rs_graphdb_spark.session import local_df
-
             spark = next(iter(g.nodes.values())).sparkSession
             empty = local_df(spark, [], "edge_id long, src long, dst long")
             es = EdgeSet(df=empty, src_label=src_pat.label,
@@ -420,14 +438,11 @@ class Compiler:
 
         def _ids(np: ast.NodePattern, label: str) -> DataFrame:
             df = g.nodes[label]
-            for k, v in np.props:
-                df = (df.filter(F.col(k) == F.lit(v))
-                      if k in df.columns else df.limit(0))
             # MERGE endpoint patterns are point lookups (a handful of ids);
             # without the coalesce the CartesianProduct below schedules
             # left-partitions × right-partitions near-empty tasks — 4000+
             # tasks for a 1×1 pair on a 32-way table
-            return df.select("id").coalesce(1)
+            return df.filter(_match_cond(df, np.props)).select("id").coalesce(1)
 
         _ensure_nodes(src_pat, es.src_label)
         _ensure_nodes(dst_pat, es.dst_label)
@@ -440,35 +455,21 @@ class Compiler:
         edge_df = es.df
         if stmt.on_match:
             matched = pairs.join(es.df.select("src", "dst"), ["src", "dst"],
-                                 "left_semi").withColumn("__m", F.lit(True))
-            flagged = edge_df.join(matched, ["src", "dst"], "left")
-            for k, v in stmt.on_match:
-                old = F.col(k) if k in edge_df.columns else F.lit(None)
-                flagged = flagged.withColumn(
-                    k, F.when(F.col("__m"), F.lit(v)).otherwise(old)
-                )
-            edge_df = flagged.drop("__m")
+                                 "left_semi")
+            edge_df = dml.set_props_on(edge_df, matched, _lits(stmt.on_match))
         if missing.isEmpty():
             if edge_df is not es.df:
                 g.edges[rel.rel_type] = EdgeSet(
                     df=edge_df, src_label=es.src_label, dst_label=es.dst_label
                 )
             return g
-        max_eid = edge_df.agg(F.max("edge_id")).first()[0] or 0
+        first_eid = dml.next_id(edge_df, "edge_id")
         w = Window.orderBy("src", "dst")
-        new = missing.withColumn("edge_id", F.lit(max_eid) + F.row_number().over(w))
-        for k, v in stmt.on_create:
-            new = new.withColumn(k, F.lit(v))
-        for c in new.columns:  # new edge-property keys extend the table
-            if c not in edge_df.columns:
-                edge_df = edge_df.withColumn(
-                    c, F.lit(None).cast(new.schema[c].dataType)
-                )
-        for c in edge_df.columns:
-            if c not in new.columns:
-                new = new.withColumn(c, F.lit(None).cast(edge_df.schema[c].dataType))
+        new = missing.withColumn("edge_id", F.lit(first_eid - 1) + F.row_number().over(w))
+        if stmt.on_create:
+            new = new.withColumns(_lits(stmt.on_create))
         g.edges[rel.rel_type] = EdgeSet(
-            df=edge_df.unionByName(new.select(edge_df.columns)),
+            df=dml.append_rows(edge_df, new),
             src_label=es.src_label,
             dst_label=es.dst_label,
         )
@@ -512,16 +513,7 @@ class Compiler:
         if updates and var in node_vars:
             np = next(p for p in pats if p.var == var)
             nodes = g.nodes[np.label]
-            cond = F.lit(True)
-            for k, v in np.props:
-                cond = cond & (
-                    (F.col(k) == F.lit(v)) if k in nodes.columns else F.lit(False)
-                )
-            for k, v in updates:
-                old = F.col(k) if k in nodes.columns else F.lit(None)
-                nodes = nodes.withColumn(
-                    k, F.when(cond, F.lit(v)).otherwise(old)
-                )
+            nodes = dml.set_props(nodes, _match_cond(nodes, np.props), _lits(updates))
             g = PropertyGraph(
                 nodes={**g.nodes, np.label: nodes}, edges=dict(g.edges)
             )
@@ -535,13 +527,8 @@ class Compiler:
         g = self.g
 
         def _ids(np: ast.NodePattern) -> DataFrame | None:
-            if np.label not in g.nodes:
-                return None
-            df = g.nodes[np.label]
-            for k, v in np.props:
-                df = (df.filter(F.col(k) == F.lit(v))
-                      if k in df.columns else df.limit(0))
-            return df.select("id")
+            df = g.nodes.get(np.label)
+            return None if df is None else df.filter(_match_cond(df, np.props)).select("id")
 
         cur = _ids(path.start)
         if cur is None:
@@ -575,8 +562,7 @@ class Compiler:
         from rs_graphdb_spark.graph import ID_STRIDE, LABEL_INDEX
 
         if not stmt.ids:  # FOREACH over [] is a no-op (foreach_test.rs:58)
-            return PropertyGraph(nodes=dict(self.g.nodes),
-                                 edges=dict(self.g.edges))
+            return self._copy()
         idxs = {i // ID_STRIDE for i in stmt.ids}
         if len(idxs) != 1:
             raise CypherCompileError("FOREACH ids must share one label namespace")
@@ -590,13 +576,10 @@ class Compiler:
                 label = next(iter(self.g.nodes))
             else:
                 raise CypherCompileError("FOREACH ids resolve to no known label")
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
-        nodes = g.nodes[label]
-        hit = F.col("id").isin(list(stmt.ids))
-        for k, v in stmt.updates:
-            old = F.col(k) if k in nodes.columns else F.lit(None)
-            nodes = nodes.withColumn(k, F.when(hit, F.lit(v)).otherwise(old))
-        g.nodes[label] = nodes
+        g = self._copy()
+        g.nodes[label] = dml.set_props(
+            g.nodes[label], F.col("id").isin(list(stmt.ids)), _lits(stmt.updates)
+        )
         return g
 
     def _run_call(self, stmt: ast.CallStmt) -> DataFrame:
@@ -639,34 +622,20 @@ class Compiler:
 
     # -- DML (graph-rewrite semantics; returns the NEW node DataFrame) ---
     def _create_node(self, g: PropertyGraph, np: ast.NodePattern) -> int:
-        """Append one node row from a pattern; opens a new label table
-        for a previously-unseen label. Returns the new id (mutates g's
-        node dict)."""
+        """Append one node row from a pattern, id = the label's next dense
+        id; opens a new label table for a previously-unseen label. Returns
+        the new id (mutates g's node dict)."""
         if np.label is None:
             raise CypherCompileError("CREATE needs a label")
-        row = {k: v for k, v in np.props}
-        spark = (
-            next(iter(g.nodes.values())).sparkSession if g.nodes
-            else None
-        )
-        if np.label not in g.nodes:
-            if spark is None:
-                raise CypherCompileError(
-                    "CREATE on an empty graph needs a SparkSession-bearing "
-                    "table — load at least one label first"
-                )
-            import pandas as pd
-
-            new = (
-                spark.createDataFrame(pd.DataFrame([row])) if row
-                else spark.range(1).select()
-            ).withColumn("id", F.lit(1).cast("long"))
-            g.nodes[np.label] = new.select("id", *[c for c in new.columns
-                                                   if c != "id"])
-            return 1
-        nodes = g.nodes[np.label]
-        spark = nodes.sparkSession
-        max_id = int(nodes.agg(F.max("id")).first()[0] or 0)
+        if not g.nodes:
+            raise CypherCompileError(
+                "CREATE on an empty graph needs a SparkSession-bearing "
+                "table — load at least one label first"
+            )
+        nodes = g.nodes.get(np.label)
+        nid = 1 if nodes is None else dml.next_id(nodes, "id")
+        row = dict(np.props)
+        spark = next(iter(g.nodes.values())).sparkSession
         if row:
             # Arrow-path literal (see session.local_df): a pickled-list
             # relation taxes every later action with a Python task
@@ -675,21 +644,18 @@ class Compiler:
             new = spark.createDataFrame(pd.DataFrame([row]))
         else:
             new = spark.range(1).select()
-        new = new.withColumn("id", F.lit(max_id + 1).cast("long"))
-        for c in new.columns:  # new property keys extend the table
-            if c not in nodes.columns:
-                nodes = nodes.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
-        for c in nodes.columns:
-            if c not in new.columns:
-                new = new.withColumn(c, F.lit(None).cast(nodes.schema[c].dataType))
-        g.nodes[np.label] = nodes.unionByName(new.select(nodes.columns))
-        return max_id + 1
+        new = new.withColumn("id", F.lit(nid).cast("long"))
+        if nodes is None:
+            g.nodes[np.label] = new.select("id", *[c for c in new.columns if c != "id"])
+        else:
+            g.nodes[np.label] = dml.append_rows(nodes, new)
+        return nid
 
     def _run_create(self, stmt: ast.CreateStmt) -> PropertyGraph:
         """CREATE appends rows (`src/cypher/executor.rs:610-648`); id =
         max(id)+1 per created node — dense-enough without a single writer
         (SURVEY.md §7 hard-point #4)."""
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+        g = self._copy()
         for np in stmt.nodes:
             self._create_node(g, np)
         return g
@@ -699,26 +665,19 @@ class Compiler:
         endpoint nodes and the relationship (reference create-path form,
         `tests/cypher_delete_test.rs:41-45`). A previously-unseen rel type
         opens a new EdgeSet between the pattern labels."""
-        from rs_graphdb_spark.graph import EdgeSet
-        from rs_graphdb_spark.session import local_df
-
         (rel, dst_node) = stmt.path.hops[0]
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+        g = self._copy()
         sid = self._create_node(g, src_pat)
         did = self._create_node(g, dst_pat)
         spark = next(iter(g.nodes.values())).sparkSession
         if rel.rel_type in g.edges:
             es = g.edges[rel.rel_type]
-            max_eid = int(es.df.agg(F.max("edge_id")).first()[0] or 0)
-            new = local_df(spark, [(max_eid + 1, sid, did)],
+            new = local_df(spark, [(dml.next_id(es.df, "edge_id"), sid, did)],
                            "edge_id long, src long, dst long")
-            g.edges[rel.rel_type] = EdgeSet(
-                df=es.df.unionByName(new, allowMissingColumns=True),
-                src_label=es.src_label, dst_label=es.dst_label,
-            )
+            g.edges[rel.rel_type] = dc_replace(es, df=dml.append_rows(es.df, new))
         else:
             if not (src_pat.label and dst_pat.label):
                 raise CypherCompileError(
@@ -751,41 +710,25 @@ class Compiler:
         """DELETE cascades to incident edges (`src/cypher/executor.rs:
         650-687`; cascade `src/storage/mem_store.rs:123-147`)."""
         victims, label = self._match_victims(stmt.match, stmt.where, stmt.var)
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
-        g.nodes[label] = g.nodes[label].join(victims, "id", "left_anti")
-        from rs_graphdb_spark.graph import EdgeSet
-
-        for rt, es in list(g.edges.items()):
-            df = es.df
-            if es.src_label == label:
-                df = df.join(victims.withColumnRenamed("id", "src"), "src", "left_anti")
-            if es.dst_label == label:
-                df = df.join(victims.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            g.edges[rt] = EdgeSet(df=df, src_label=es.src_label, dst_label=es.dst_label)
-        return g
+        return dml.delete_ids(self._copy(), label, victims)
 
     def _run_set(self, stmt: ast.SetStmt) -> PropertyGraph:
         """SET merges properties under the match predicate
-        (`src/cypher/executor.rs:689-738`)."""
+        (`src/cypher/executor.rs:689-738`). SET may introduce a new
+        property key — the reference's bags are open maps
+        (`src/values/value.rs:14`); here that extends the table schema
+        with NULLs for unmatched rows."""
         victims, label = self._match_victims(stmt.match, stmt.where, stmt.var)
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
-        nodes = g.nodes[label]
-        hit = victims.withColumn("__hit", F.lit(True))
-        df = nodes.join(hit, "id", "left_outer")
-        for k, v in stmt.updates:
-            # SET may introduce a new property key — the reference's bags
-            # are open maps (`src/values/value.rs:14`); here that extends
-            # the table schema with NULLs for unmatched rows
-            old = F.col(k) if k in nodes.columns else F.lit(None)
-            df = df.withColumn(k, F.when(F.col("__hit"), F.lit(v)).otherwise(old))
-        g.nodes[label] = df.drop("__hit")
+        g = self._copy()
+        g.nodes[label] = dml.set_props_on(g.nodes[label], victims, _lits(stmt.updates))
         return g
 
     def _run_merge(self, stmt: ast.MergeStmt) -> PropertyGraph:
         """MERGE = match full pattern else create, with ON CREATE SET /
-        ON MATCH SET (`src/cypher/executor.rs:740-1211`)."""
+        ON MATCH SET (`src/cypher/executor.rs:740-1211`). A label the
+        graph lacks matches nothing, so MERGE opens it, as CREATE does."""
         np = stmt.node
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+        g = self._copy()
         if np.label is None:
             # MERGE (n) — matches ANY node (reference
             # `tests/merge_comprehensive_test.rs:392-406`): a no-op on a
@@ -797,43 +740,12 @@ class Compiler:
                 "MERGE without a label on an empty graph is unsupported "
                 "(label-table model has no label-less store)"
             )
-        nodes = g.nodes[np.label]
-        spark = nodes.sparkSession
-        cond = F.lit(True)
-        for k, v in np.props:
-            # a property key the table has never seen can match nothing —
-            # the full pattern is unmatched and MERGE creates (reference
-            # partial-match scenario `merge_comprehensive_test.rs:410-430`)
-            cond = cond & (
-                (F.col(k) == F.lit(v)) if k in nodes.columns else F.lit(False)
-            )
-        matched = nodes.filter(cond)
-        if matched.isEmpty():
-            props = dict(np.props)
-            for k, v in stmt.on_create:
-                props[k] = v
-            max_id = nodes.agg(F.max("id")).first()[0] or 0
-            # Arrow-path literal row: a pickled-list relation would re-run
-            # a Python worker task on EVERY later action over the unioned
-            # table (session.local_df docstring has the numbers)
-            import pandas as pd
-
-            new = spark.createDataFrame(pd.DataFrame([props])).withColumn(
-                "id", F.lit(max_id + 1)
-            )
-            for c in new.columns:  # new property keys extend the table
-                if c not in nodes.columns:
-                    nodes = nodes.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
-            for c in nodes.columns:
-                if c not in new.columns:
-                    new = new.withColumn(c, F.lit(None).cast(nodes.schema[c].dataType))
-            g.nodes[np.label] = nodes.unionByName(new.select(nodes.columns))
+        nodes = g.nodes.get(np.label)
+        cond = None if nodes is None else _match_cond(nodes, np.props)
+        if nodes is None or nodes.filter(cond).isEmpty():
+            self._create_node(g, dc_replace(np, props=(*np.props, *stmt.on_create)))
         elif stmt.on_match:
-            upd = nodes
-            for k, v in stmt.on_match:
-                old = F.col(k) if k in nodes.columns else F.lit(None)
-                upd = upd.withColumn(k, F.when(cond, F.lit(v)).otherwise(old))
-            g.nodes[np.label] = upd
+            g.nodes[np.label] = dml.set_props(nodes, cond, _lits(stmt.on_match))
         return g
 
 

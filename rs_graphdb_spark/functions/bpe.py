@@ -26,6 +26,7 @@ expressible as plain DataFrame algebra:
 from __future__ import annotations
 
 import functools
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -310,7 +311,8 @@ def bpe_train(
     (10k-32k merges) on the strict path is tens of thousands of
     sequential jobs — scheduler latency alone is hours before any data
     cost. Above :data:`BPE_STRICT_MAX_MERGES` merges the strict path
-    AUTO-DELEGATES to the batched path (``rounds_batch=256``), keeping
+    AUTO-DELEGATES to the batched path (``rounds_batch=256``, with a
+    ``UserWarning``), keeping
     Sennrich count ordering within each batch under the documented
     symbol-disjointness rule; jobs drop from O(num_merges) to
     O(num_merges/256). Callers that truly need strict order beyond the
@@ -320,6 +322,13 @@ def bpe_train(
         raise ValueError(f"rounds_batch must be >= 1, got {rounds_batch}")
     if (rounds_batch == 1 and not strict_unbounded
             and num_merges > BPE_STRICT_MAX_MERGES):
+        warnings.warn(
+            f"bpe_train: {num_merges} merges exceed BPE_STRICT_MAX_MERGES="
+            f"{BPE_STRICT_MAX_MERGES}; training in batched order "
+            "(rounds_batch=256). Pass strict_unbounded=True for strict "
+            "Sennrich order.",
+            stacklevel=2,
+        )
         rounds_batch = 256
     from rs_graphdb_spark.session import local_df
 

@@ -555,39 +555,6 @@ def _posting_pairs(g: DataFrame) -> DataFrame:
     )
 
 
-def _prefix_postings(sh: DataFrame, threshold: float) -> DataFrame:
-    """AllPairs/PPJoin prefix filter: order each document's postings by
-    global rarity (document frequency asc, shingle asc — a total order, no
-    global rank needed) and keep only the first ``|S| − ⌈t·|S|⌉ + 1``.
-
-    Why lossless: Jaccard(A,B) ≥ t ⟹ |A∩B| ≥ ⌈t·max(|A|,|B|)⌉; the
-    globally-SMALLEST common shingle must then lie inside both docs'
-    prefixes (if it didn't for A, the whole overlap would fit in A's
-    suffix of size ⌈t·|A|⌉ − 1 < |A∩B|). So joining prefix×prefix loses
-    no qualifying pair, and candidate mass drops from Σ_s df(s)² to
-    Σ_s pref_df(s)² — the standard 10-100× cut on near-dup corpora."""
-    from pyspark.sql.window import Window
-
-    dfreq = sh.groupBy("s").agg(F.count("*").alias("df_"))
-    w_doc = Window.partitionBy("doc").orderBy(F.col("df_").asc(), F.col("s").asc())
-    # shuffle_hash hint: both sides come off localCheckpoint leaves whose
-    # size Catalyst can't estimate; a mis-chosen broadcast of the posting
-    # frame OOMs the driver at scale (seen at the 10x probe)
-    ranked = (
-        sh.join(dfreq.hint("shuffle_hash"), "s")
-        .withColumn("rn", F.row_number().over(w_doc))
-        .withColumn("n", F.count("*").over(Window.partitionBy("doc")))
-    )
-    # round before ceil: 0.8*5 = 4.000000000000001 would otherwise ceil to
-    # 5 and over-shrink the prefix (a silent false-negative source)
-    min_overlap = F.ceil(F.round(F.lit(threshold) * F.col("n"), 9))
-    return (
-        ranked.filter(F.col("rn") <= F.col("n") - min_overlap + 1)
-        .select("doc", "s")
-        .localCheckpoint(eager=True)
-    )
-
-
 #: auto-route floor for the packed exchange (total shingle postings):
 #: below it the pair exchange is too small to repay the packed build's
 #: extra stages (see the routing comment in ngram_jaccard_pairs).
@@ -684,15 +651,14 @@ def ngram_jaccard_pairs(
     max_shingle_df: int | None = 10_000,
     max_shingle_df_frac: float | None = 0.05,
     sets_df: DataFrame | None = None,
-    prefix_filter: bool | None = None,
     mode: str = "ascii",
     engine: str = "auto",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join via the sparse explode-join.
 
     Scale path: pairs only materialize for docs sharing ≥1 shingle, and the
-    shuffle key is the shingle itself. Two complementary bounds keep the
-    self-join linear-ish at 100 TB:
+    shuffle key is the shingle itself. One bound keeps the self-join
+    linear-ish at 100 TB:
 
     - hot ("stop") shingles are removed by document frequency BEFORE the
       join. The effective cap is
@@ -710,15 +676,6 @@ def ngram_jaccard_pairs(
       the identical cap. NB: on a mirrored/scale-proportional corpus the
       relative cap fires at every scale or none — that scale-invariance
       is the point.
-    - ``prefix_filter`` applies the AllPairs/PPJoin prefix principle
-      (:func:`_prefix_postings`): only each doc's rarest
-      ``|S| − ⌈t·|S|⌉ + 1`` shingles become join keys; candidates are then
-      verified with EXACT Jaccard over the full non-stop sets, so the
-      result is identical to the unfiltered join (a property test pins
-      this). Default off: benchmarked slower than the fused pipeline on
-      every corpus shape and threshold tried (PLANS.md round-3 table) —
-      it exists as an opt-in for extreme-df corpora where the count
-      path's Σdf² genuinely explodes.
 
     Pass a precomputed ``sets_df`` (from :func:`shingle_sets`) to share the
     shingle frame across dedup passes.
@@ -768,7 +725,6 @@ def ngram_jaccard_pairs(
     # strings, which the int() bounds below cannot parse
     packable = (
         engine != "legacy"
-        and not prefix_filter
         and stats is not None
         and dict(sets_df.dtypes).get("doc_id", "").startswith(
             ("bigint", "int", "smallint", "tinyint"))
@@ -808,55 +764,6 @@ def ngram_jaccard_pairs(
         .groupBy("doc").agg(F.count("*").alias("n"))
     )
     gp = g.filter(F.size("ds") >= 2).select(F.array_sort("ds").alias("ds"))
-    if prefix_filter is None:
-        # default OFF: measured on both corpus shapes (typical sf0.1 and a
-        # mirrored-shard near-dup-dense 10×) at t=0.5 AND t=0.8, the fused
-        # grouped-posting pipeline beat the prefix path every time — when
-        # near-dups dominate, the duplicates share exactly the rare
-        # (prefix) shingles, so the mass cut never outweighs the extra
-        # rank/verify stages (PLANS.md round-3 crossover table). Opt in
-        # for extreme-df corpora where Σdf² genuinely explodes.
-        prefix_filter = False
-    if prefix_filter:
-        # non-stop postings rebuilt from the checkpointed grouped frame —
-        # ranking and verification must both exclude stop shingles
-        sh_ns = g.select(F.col("s"), F.explode("ds").alias("doc"))
-        pre_g = (
-            _prefix_postings(sh_ns, threshold)
-            .groupBy("s").agg(F.collect_list("doc").alias("ds"))
-            .filter(F.size("ds") >= 2)
-            .select(F.array_sort("ds").alias("ds"))
-        )
-        from pyspark import StorageLevel
-
-        # DISK_ONLY, not localCheckpoint: on a near-dup-dense corpus the
-        # candidate set can be tens of millions of rows — an eager
-        # in-memory materialization OOMs the executors (seen at the 10x
-        # probe); disk persistence keeps the two consumers below from
-        # recomputing it while never holding it on-heap
-        cands = (
-            _posting_pairs(pre_g)
-            .dropDuplicates(["a", "b"])
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        # verify on full non-stop sets, but only for docs that appear in a
-        # candidate pair — the collect_list agg never touches the rest of
-        # the corpus
-        cand_docs = (
-            cands.select(F.col("a").alias("doc"))
-            .unionByName(cands.select(F.col("b").alias("doc")))
-            .dropDuplicates(["doc"])
-        )
-        arrs = (
-            sh_ns.join(F.broadcast(cand_docs), "doc", "left_semi")
-            .groupBy("doc")
-            .agg(F.collect_list("s").alias("sets"))
-        )
-        verified = exact_jaccard(cands, arrs.withColumnRenamed("doc", "doc_id"),
-                                 "doc_id", "sets")
-        return _materialize_result(
-            verified.filter(F.col("jaccard") >= threshold), cands
-        )
     inter = _posting_pairs(gp).groupBy("a", "b").agg(F.count("*").alias("i"))
     na = sizes.select(F.col("doc").alias("a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc").alias("b"), F.col("n").alias("nb"))

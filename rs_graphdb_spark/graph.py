@@ -155,8 +155,8 @@ class PropertyGraph:
     #: create_nodes (id minted from a possibly-colliding natural key)
     #: and the HTTP server's create nodes/rels (arbitrary client ids
     #: and endpoints) — clear it (r10 ADVICE #1). Graphs assembled ad
-    #: hoc (Cypher CREATE paths) default to False and keep the full
-    #: join.
+    #: hoc, and every Cypher write's output graph, default to False and
+    #: keep the full join.
     edge_integrity: bool = False
 
     # -- scans ------------------------------------------------------------

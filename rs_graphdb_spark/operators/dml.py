@@ -5,6 +5,29 @@ The reference mutates stores in place (CREATE/DELETE/SET/MERGE,
 equivalent is a *rewrite*: each operation produces new node/edge
 DataFrames (write them back as Parquet/Delta for persistence — batch-job
 atomicity replaces the reference's op-log transactions, SURVEY.md §2.11).
+
+Every write route — the functions below, the Cypher compiler's DML, the
+HTTP server and the partitioned store — rewrites its tables through five
+operations, each written once here (the reference's single store,
+`src/storage/mem_store.rs:25-26,56-57,313-325`):
+
+- :func:`set_props` — the only place a property value is written into a
+  column: a conditional rewrite under a row predicate;
+- :func:`set_props_on` — :func:`set_props` on the rows whose key columns
+  appear in a key frame (one flag join);
+- :func:`append_rows` — union new rows in; new property keys extend the
+  table with NULLs on the existing rows;
+- :func:`next_id` — the next dense id, ``max + 1`` (1 on an empty table);
+- :func:`delete_ids` — anti-join node ids out of their label table and
+  cascade to every incident edge set.
+
+Type rule (:func:`set_props` and :func:`append_rows`): a value's type
+must equal its column's type, except that a numeric value may go into a
+numeric column (the column widens) and NULL may go anywhere. Any other
+write raises ``ValueError`` naming the column and both types: left to
+Spark's union/CASE coercion, a string column written with a number turns
+``bigint`` and every later read of the label fails its ANSI cast. The
+check compares schemas only; it runs no Spark job.
 """
 
 from __future__ import annotations
@@ -14,8 +37,91 @@ from dataclasses import replace as dc_replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, NullType, NumericType, StructType
 
 from rs_graphdb_spark.graph import PropertyGraph, label_base
+
+
+def _fits(value: DataType, column: DataType) -> bool:
+    """The type rule for one column (module docstring). A NULL-typed
+    column holds no value a new type could break."""
+    if isinstance(value, NullType) or isinstance(column, NullType):
+        return True
+    if isinstance(value, NumericType) and isinstance(column, NumericType):
+        return True
+    if isinstance(value, ArrayType) and isinstance(column, ArrayType):
+        return _fits(value.elementType, column.elementType)
+    # simpleString compares nested types but not nullability flags
+    return value.simpleString() == column.simpleString()
+
+
+def _check_types(df: DataFrame, values: StructType) -> None:
+    have = {f.name: f.dataType for f in df.schema}
+    for f in values:
+        col = have.get(f.name)
+        if col is not None and not _fits(f.dataType, col):
+            raise ValueError(
+                f"column {f.name!r} is {col.simpleString()}; cannot write a "
+                f"{f.dataType.simpleString()} value into it"
+            )
+
+
+def set_props(df: DataFrame, cond: Column, updates: dict[str, Column]) -> DataFrame:
+    """SET under a match predicate (`src/cypher/executor.rs:689-738`):
+    merge-not-replace property semantics (`src/storage/mem_store.rs:
+    313-325`) → conditional column rewrite. A key the table lacks becomes
+    a new column, NULL on the unmatched rows. Every update sees the
+    pre-SET row, so ``cond`` may read a column that is being set."""
+    if not updates:
+        return df
+    _check_types(df, df.select(*[v.alias(k) for k, v in updates.items()]).schema)
+    return df.withColumns({
+        k: F.when(cond, v).otherwise(F.col(k) if k in df.columns else F.lit(None))
+        for k, v in updates.items()
+    })
+
+
+def set_props_on(df: DataFrame, keys: DataFrame, updates: dict[str, Column]) -> DataFrame:
+    """:func:`set_props` on the rows of ``df`` whose ``keys.columns``
+    values appear in ``keys`` (distinct rows): a left join of a ``__m``
+    flag, no driver-side collect. Column order is kept, new keys last."""
+    if not updates:
+        return df
+    flagged = df.join(keys.withColumn("__m", F.lit(True)), keys.columns, "left")
+    added = [k for k in updates if k not in df.columns]
+    return set_props(flagged, F.col("__m"), updates).select(*df.columns, *added)
+
+
+def append_rows(df: DataFrame, new: DataFrame) -> DataFrame:
+    """Append ``new`` rows to a table: a by-name union in which a key
+    either side lacks is NULL there, under the type rule."""
+    _check_types(df, new.schema)
+    return df.unionByName(new, allowMissingColumns=True)
+
+
+def next_id(df: DataFrame, col: str) -> int:
+    """Next dense id of a table (the reference's counter,
+    `src/storage/mem_store.rs:56-57`): ``max(col) + 1``, or 1 when the
+    table is empty. One Spark job."""
+    top = df.agg(F.max(col)).first()[0]
+    return 1 if top is None else int(top) + 1
+
+
+def delete_ids(graph: PropertyGraph, label: str, victims: DataFrame) -> PropertyGraph:
+    """Delete the node ids in ``victims`` (one ``id`` column) from
+    ``label`` and cascade to every edge set touching that label
+    (`src/storage/mem_store.rs:123-147`)."""
+    nodes = dict(graph.nodes)
+    nodes[label] = graph.nodes[label].join(victims, "id", "left_anti")
+    edges = {}
+    for rel, es in graph.edges.items():
+        df = es.df
+        if es.src_label == label:
+            df = df.join(victims.withColumnRenamed("id", "src"), "src", "left_anti")
+        if es.dst_label == label:
+            df = df.join(victims.withColumnRenamed("id", "dst"), "dst", "left_anti")
+        edges[rel] = dc_replace(es, df=df)
+    return dc_replace(graph, nodes=nodes, edges=edges)
 
 
 def create_nodes(
@@ -29,7 +135,7 @@ def create_nodes(
         (F.lit(label_base(label)) + F.col(key_col).cast("long")).alias("id"), "*"
     )
     nodes = dict(graph.nodes)
-    nodes[label] = graph.nodes[label].unionByName(with_id, allowMissingColumns=True)
+    nodes[label] = append_rows(graph.nodes[label], with_id)
     # edge_integrity cleared (r10 ADVICE #1): a colliding natural key
     # mints a DUPLICATE id here (no uniqueness validation — contrast
     # merge_nodes, which anti-joins against existing keys), breaking the
@@ -41,35 +147,12 @@ def create_nodes(
 
 def delete_nodes(graph: PropertyGraph, label: str, cond: Column) -> PropertyGraph:
     """DELETE with cascade to incident edges
-    (`src/cypher/executor.rs:650-687`; cascade `src/storage/mem_store.rs:
-    123-147`): anti-join the victims out of the label table and out of
-    every edge set touching that label."""
-    victims = graph.nodes[label].filter(cond).select("id")
-    nodes = dict(graph.nodes)
-    # Survivors via left_anti on the victim set, NOT filter(~cond): a NULL
-    # predicate (nullable property) must keep the row, matching the Cypher
-    # executor's three-valued WHERE semantics.
-    nodes[label] = graph.nodes[label].join(victims, "id", "left_anti")
-    edges = {}
-    for rel, es in graph.edges.items():
-        df = es.df
-        if es.src_label == label:
-            df = df.join(victims.withColumnRenamed("id", "src"), "src", "left_anti")
-        if es.dst_label == label:
-            df = df.join(victims.withColumnRenamed("id", "dst"), "dst", "left_anti")
-        edges[rel] = dc_replace(es, df=df)
-    return dc_replace(graph, nodes=nodes, edges=edges)
-
-
-def set_props(df: DataFrame, cond: Column, updates: dict[str, Column]) -> DataFrame:
-    """SET under a match predicate (`src/cypher/executor.rs:689-738`):
-    merge-not-replace property semantics (`src/storage/mem_store.rs:
-    313-325`) → conditional column rewrite."""
-    out = df
-    for col_name, value in updates.items():
-        base = F.col(col_name) if col_name in df.columns else F.lit(None)
-        out = out.withColumn(col_name, F.when(cond, value).otherwise(base))
-    return out
+    (`src/cypher/executor.rs:650-687`): :func:`delete_ids` on the rows
+    matching ``cond``. Survivors are the anti-join complement of the
+    victim set, NOT ``filter(~cond)``: a NULL predicate (nullable
+    property) keeps the row, matching the Cypher executor's three-valued
+    WHERE semantics."""
+    return delete_ids(graph, label, graph.nodes[label].filter(cond).select("id"))
 
 
 def merge_nodes(
@@ -88,9 +171,6 @@ def merge_nodes(
     # keys would multiply matched rows through the flag join and mint
     # duplicate ids in the created branch.
     incoming = incoming.dropDuplicates([key_col])
-    matched_keys = incoming.select(key_col).join(
-        existing.select(key_col), key_col, "left_semi"
-    )
     to_create = incoming.join(existing.select(key_col), key_col, "left_anti")
     if on_create:
         for c, v in on_create.items():
@@ -98,19 +178,15 @@ def merge_nodes(
     created = to_create.select(
         (F.lit(label_base(label)) + F.col(key_col).cast("long")).alias("id"), "*"
     )
-    # ON MATCH applied via join flag (no driver-side collect)
-    flag = matched_keys.withColumn("__matched", F.lit(True))
-    updated = existing.join(flag, key_col, "left")
+    updated = existing
     if on_match:
-        for c, v in on_match.items():
-            updated = updated.withColumn(
-                c, F.when(F.col("__matched"), v).otherwise(F.col(c))
-            )
-    updated = updated.drop("__matched")
+        matched_keys = incoming.select(key_col).join(
+            existing.select(key_col), key_col, "left_semi"
+        )
+        updated = set_props_on(existing, matched_keys, on_match)
     nodes = dict(graph.nodes)
-    nodes[label] = updated.unionByName(created, allowMissingColumns=True)
+    nodes[label] = append_rows(updated, created)
     return dc_replace(graph, nodes=nodes)
-
 
 def update_node_props(
     graph: PropertyGraph, label: str, node_id: int, props: dict

@@ -11,7 +11,10 @@ plus the three protobuf-over-HTTP RPCs under `/grpc/<Method>`
 
 Stdlib `ThreadingHTTPServer` only (no web framework in this environment);
 engine logic lives in `sources/json_api.py`, `cypher/`, `operators/dml.py`
-— this module is ~transport. Responses are JSON rows with a row cap (the
+— this module is transport. Every write rewrites its tables through
+`operators/dml.py` (ids, property merges, appends, cascades, and the type
+rule: a write that would change a column's type answers 400 and leaves
+the served graph as it was). Responses are JSON rows with a row cap (the
 reference caps via pagination; a serving layer must never `collect()` an
 unbounded result).
 
@@ -51,6 +54,7 @@ from pyspark.sql import functions as F
 
 from rs_graphdb_spark.cypher import ast, compiler
 from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.operators import dml
 from rs_graphdb_spark.session import local_df
 from rs_graphdb_spark.sources.json_api import json_query, substring_search
 
@@ -288,10 +292,7 @@ class GraphHTTPServer:
                 if "id" in props:
                     nid = int(props["id"])
                 else:  # dense next-id like the reference's counter
-                    nid = (
-                        (g.nodes[label].agg(F.max("id")).first()[0] or 0) + 1
-                        if label in g.nodes else 1
-                    )
+                    nid = dml.next_id(g.nodes[label], "id") if label in g.nodes else 1
                 self._create_nodes(
                     [{"labels": [label], "properties": {**props, "id": nid}}]
                 )
@@ -300,13 +301,8 @@ class GraphHTTPServer:
             req = pw.decode_create_rel_request(body)
             with self._lock:
                 g = self.graph
-                if req["rel_type"] in g.edges:
-                    eid = (
-                        g.edges[req["rel_type"]].df.agg(F.max("edge_id"))
-                        .first()[0] or 0
-                    ) + 1
-                else:
-                    eid = 1
+                eid = (dml.next_id(g.edges[req["rel_type"]].df, "edge_id")
+                       if req["rel_type"] in g.edges else 1)
                 self._create_rels([{
                     "rel_type": req["rel_type"], "edge_id": eid,
                     "src": req["start"], "dst": req["end"],
@@ -476,12 +472,8 @@ class GraphHTTPServer:
                 new = spark.createDataFrame(pd.DataFrame(rows))
                 new = new.select(F.col("id").cast("long"), *
                                  [c for c in new.columns if c != "id"])
-                if label in nodes:
-                    nodes[label] = nodes[label].unionByName(
-                        new, allowMissingColumns=True
-                    )
-                else:
-                    nodes[label] = new
+                nodes[label] = (dml.append_rows(nodes[label], new)
+                                if label in nodes else new)
                 created += len(rows)
             # client-supplied node ids are not validated unique →
             # edge_integrity's unique-id premise no longer holds
@@ -504,8 +496,7 @@ class GraphHTTPServer:
                 new = local_df(spark, rows, "edge_id long, src long, dst long")
                 if rt in edges:
                     edges[rt] = dc_replace(
-                        edges[rt],
-                        df=edges[rt].df.unionByName(new, allowMissingColumns=True),
+                        edges[rt], df=dml.append_rows(edges[rt].df, new)
                     )
                 else:
                     edges[rt] = EdgeSet(df=new, src_label="Node", dst_label="Node")
@@ -517,45 +508,30 @@ class GraphHTTPServer:
                                     edge_integrity=False)
         return {"ok": True, "created": created}
 
+    # PUT: the label probe above the lock, then dml.set_props; not
+    # dml.update_node_props, whose existence check is one more job per PUT
     def _update_node(self, node_id: int, props: dict) -> dict:
         lb = _find_label(self.graph, node_id)
+        updates = {k: F.lit(v) for k, v in props.items() if k != "id"}
         with self._lock:
             nodes = dict(self.graph.nodes)
-            df = nodes[lb]
-            for k, v in props.items():
-                if k == "id":
-                    continue
-                if k not in df.columns:
-                    df = df.withColumn(k, F.lit(None).cast("string"))
-                df = df.withColumn(
-                    k, F.when(F.col("id") == node_id, F.lit(v)).otherwise(F.col(k))
-                )
-            nodes[lb] = df
+            nodes[lb] = dml.set_props(nodes[lb], F.col("id") == node_id, updates)
             self.graph = dc_replace(self.graph, nodes=nodes)
         return {"ok": True}
 
     def _delete_node(self, node_id: int) -> dict:
-        from rs_graphdb_spark.operators.dml import delete_nodes
-
         lb = _find_label(self.graph, node_id)
         with self._lock:
-            self.graph = delete_nodes(self.graph, lb, F.col("id") == node_id)
+            self.graph = dml.delete_nodes(self.graph, lb, F.col("id") == node_id)
         return {"ok": True}
 
     def _update_rel(self, edge_id: int, props: dict) -> dict:
         rt = _find_rel_type(self.graph, edge_id)
+        updates = {k: F.lit(v) for k, v in props.items()
+                   if k not in ("edge_id", "src", "dst")}
         with self._lock:
             edges = dict(self.graph.edges)
-            df = edges[rt].df
-            for k, v in props.items():
-                if k in ("edge_id", "src", "dst"):
-                    continue
-                if k not in df.columns:
-                    df = df.withColumn(k, F.lit(None).cast("string"))
-                df = df.withColumn(
-                    k,
-                    F.when(F.col("edge_id") == edge_id, F.lit(v)).otherwise(F.col(k)),
-                )
+            df = dml.set_props(edges[rt].df, F.col("edge_id") == edge_id, updates)
             edges[rt] = dc_replace(edges[rt], df=df)
             self.graph = dc_replace(self.graph, edges=edges)
         return {"ok": True}

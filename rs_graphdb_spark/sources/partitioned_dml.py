@@ -53,6 +53,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.operators.dml import set_props_on
 
 #: dataset partition column (lives in directory names, never in data files)
 PB = "pb"
@@ -451,9 +452,9 @@ def set_props_partitioned(
     updates: dict[str, Column],
 ) -> int:
     """SET under a match predicate, rewriting only buckets that contain a
-    matching row (merge-not-replace semantics, same conditional-column
-    rewrite as :func:`operators.dml.set_props`), published with one
-    manifest flip. Returns matched count."""
+    matching row with :func:`operators.dml.set_props_on` (merge-not-replace
+    semantics and the type rule), published with one manifest flip.
+    Returns matched count."""
     ver, manifest = read_manifest(path)
     n = manifest["id_buckets"]
     node_rel = manifest["tables"][f"nodes/{label}"]
@@ -466,21 +467,9 @@ def set_props_partitioned(
     if n_matched == 0:
         return 0
 
-    def _apply(df: DataFrame) -> DataFrame:
-        out = df
-        flag = matched.withColumn("__m", F.lit(True))
-        out = out.join(flag, "id", "left")
-        for col_name, value in updates.items():
-            base = (
-                F.col(col_name) if col_name in df.columns else F.lit(None)
-            )
-            out = out.withColumn(
-                col_name, F.when(F.col("__m"), value).otherwise(base)
-            )
-        return out.drop("__m")
-
     staged = _rewrite_buckets(
-        spark, path, node_rel, _victim_buckets(matched, "id", n), _apply
+        spark, path, node_rel, _victim_buckets(matched, "id", n),
+        lambda df: set_props_on(df, matched, updates),
     )
     if staged:
         _commit(path, ver, manifest, {f"nodes/{label}": staged})

@@ -180,6 +180,18 @@ def test_delete_cascades(g):
     assert g2.edges["CUST_NATION"].df.filter(F.col("dst") == nid).count() == 0
 
 
+@pytest.mark.parametrize("stmt", [
+    "MATCH (n:Nation) WHERE n.n_nationkey = 3 SET n.n_name = 7",
+    "CREATE (n:Nation {n_name: 7, n_regionkey: 0})",
+    "MERGE (n:Nation {n_nationkey: 3}) ON MATCH SET n.n_name = 3",
+])
+def test_write_cannot_change_column_type(g, stmt):
+    # a number into the string column n_name would turn it bigint and
+    # break every later read of Nation under ANSI casts
+    with pytest.raises(ValueError, match=r"'n_name' is string"):
+        execute_cypher(g, stmt)
+
+
 def test_set_updates_props(g):
     g2 = execute_cypher(
         g, "MATCH (n:Nation) WHERE n.n_regionkey = 2 SET n.n_name = 'RENAMED'"

@@ -170,10 +170,44 @@ def test_merge_nodes_duplicate_incoming_keys(g, spark):
         [(5, "dup-a"), (5, "dup-b"), (999, "new-x"), (999, "new-y")],
         "n_nationkey int, note string",
     )
-    out = merge_nodes(g, "Nation", "n_nationkey", incoming)
-    got = out.nodes["Nation"]
-    assert got.count() == n_before + 1  # one create, no multiplication
-    assert got.groupBy("id").count().filter(F.col("count") > 1).isEmpty()
+    # ON MATCH may set a key the table lacks: NULL on unmatched rows
+    for on_match in (None, {"touched": F.lit(True)}):
+        out = merge_nodes(g, "Nation", "n_nationkey", incoming, on_match=on_match)
+        got = out.nodes["Nation"]
+        assert got.count() == n_before + 1  # one create, no multiplication
+        assert got.groupBy("id").count().filter(F.col("count") > 1).isEmpty()
+        if on_match:
+            touched = {r["n_nationkey"] for r in got.filter("touched").collect()}
+            assert touched == {5}
+            assert got.filter(F.col("touched").isNull()).count() == n_before
+
+
+def test_set_props_type_rule(spark):
+    """A write may not change a column's type: a string into a bigint
+    column (or a number into a string column) raises, naming the column
+    and both types; numeric widening, NULL and new keys pass. Every
+    update sees the pre-SET row."""
+    from rs_graphdb_spark.operators.dml import set_props
+    from rs_graphdb_spark.session import local_df
+
+    df = local_df(spark, [(1, "a", 30), (2, "b", 40)],
+                  "id long, name string, age long")
+    hit = F.col("id") == 1
+    with pytest.raises(ValueError, match=r"'age' is bigint.*string"):
+        set_props(df, hit, {"age": F.lit("abc")})
+    with pytest.raises(ValueError, match=r"'age' is bigint.*string"):
+        set_props(df, hit, {"age": F.lit("30")})
+    with pytest.raises(ValueError, match=r"'name' is string.*int"):
+        set_props(df, hit, {"name": F.lit(7)})
+    out = set_props(df, hit, {"age": F.lit(1.5), "name": F.lit(None),
+                              "tags": F.lit(["x"])})
+    assert dict(out.dtypes) == {"id": "bigint", "name": "string",
+                                "age": "double", "tags": "array<string>"}
+    assert [tuple(r) for r in out.orderBy("id").collect()] == [
+        (1, None, 1.5, ["x"]), (2, "b", 40.0, None)]
+    out = set_props(df, F.col("age") > 35, {"age": F.lit(0), "old": F.lit(True)})
+    assert [(r["age"], r["old"]) for r in out.orderBy("id").collect()] == [
+        (30, None), (0, True)]
 
 
 def test_scc_raises_rather_than_dropping_nodes(spark):

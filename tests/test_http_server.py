@@ -117,6 +117,23 @@ def test_rest_node_crud_roundtrip(server):
     assert st == 200 and out["created"] == 1
     st, got = _call(server, "GET", "/nodes/900001")
     assert got["rows"][0]["name"] == "w1"
+    # a write that would turn the string column `name` bigint answers 400
+    # and leaves the served graph readable and unchanged
+    for method, path, body in (
+        ("PUT", "/nodes/900001", {"properties": {"name": 7}}),
+        ("POST", "/cypher", {"query": "MATCH (n:Widget) WHERE n.id = 900001 "
+                                      "SET n.name = 7"}),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _call(server, method, path, body)
+        with e.value as err:
+            assert err.code == 400 and "'name' is string" in err.read().decode()
+        st, got = _call(server, "GET", "/nodes/900001")
+        assert st == 200 and got["rows"][0]["name"] == "w1"
+    # a new key takes the value's type
+    st, _ = _call(server, "PUT", "/nodes/900001", {"properties": {"tags": ["x"]}})
+    st, got = _call(server, "GET", "/nodes/900001")
+    assert st == 200 and got["rows"][0]["tags"] == ["x"]
     # update merges props
     st, _ = _call(server, "PUT", "/nodes/900001", {"properties": {"name": "w2"}})
     st, got = _call(server, "GET", "/nodes/900001")

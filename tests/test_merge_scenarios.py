@@ -177,6 +177,14 @@ def test_merge_empty_db(spark):
     assert _names(g) == ["First"]
 
 
+def test_merge_new_label_creates_it(spark):
+    # a label the graph lacks matches nothing: MERGE opens it, like CREATE
+    q = "MERGE (n:Q {x: 1})"
+    g = execute_cypher(execute_cypher(_person_graph(spark), q), q)
+    assert [(r["id"], r["x"]) for r in g.nodes["Q"].collect()] == [(1, 1)]
+    assert g.nodes["Person"].count() == 3
+
+
 def test_merge_no_label_no_props(spark):
     g0 = _person_graph(spark)
     g = execute_cypher(g0, "MERGE (n)")

@@ -579,48 +579,6 @@ def test_shingles_short_doc_yields_empty_not_error(spark):
     assert pairs.count() == 0
 
 
-def test_ngram_prefix_filter_lossless_and_smaller(spark):
-    """The AllPairs prefix filter must (a) return EXACTLY the unfiltered
-    join's pairs and (b) generate strictly fewer join candidates on a
-    corpus with shared-but-not-similar content."""
-    import random
-
-    from rs_graphdb_spark.functions.dedup import (
-        _prefix_postings,
-        ngram_jaccard_pairs,
-        shingle_sets,
-    )
-
-    rng = random.Random(11)
-    words = [f"w{i}" for i in range(40)]
-    base = [rng.choice(words) for _ in range(60)]
-    rows = []
-    for i in range(30):
-        doc = list(base)
-        for _ in range(rng.randrange(0, 25)):  # varying mutation depth
-            doc[rng.randrange(len(doc))] = rng.choice(words)
-        rows.append((i, " ".join(doc)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for t in (0.5, 0.8):
-        sets_df = shingle_sets(df, "doc_id", "text")
-        fast = ngram_jaccard_pairs(df, "doc_id", "text", threshold=t,
-                                   sets_df=sets_df, prefix_filter=True)
-        slow = ngram_jaccard_pairs(df, "doc_id", "text", threshold=t,
-                                   sets_df=sets_df, prefix_filter=False)
-        got = {(r["a"], r["b"]): round(r["jaccard"], 9) for r in fast.collect()}
-        want = {(r["a"], r["b"]): round(r["jaccard"], 9) for r in slow.collect()}
-        assert got == want and len(want) > 0
-        # candidate mass: sum over shingles of (postings choose 2)
-        sh = sets_df.select(F.col("doc_id").alias("doc"), F.explode("sets").alias("s"))
-        pre = _prefix_postings(sh, t)
-
-        def mass(postings):
-            per = postings.groupBy("s").count().collect()
-            return sum(r["count"] * (r["count"] - 1) // 2 for r in per)
-
-        assert mass(pre) < mass(sh)
-
-
 def test_minhash_collapse_exact_equals_uncollapsed(spark):
     """Exact-duplicate collapse must emit the identical pair set (same
     jaccard values) as the uncollapsed pipeline on a corpus with exact

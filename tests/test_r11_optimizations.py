@@ -10,6 +10,8 @@ dedup pipelines after their barrier removal.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -131,11 +133,16 @@ def test_bpe_strict_guard_delegates_to_batched(spark, monkeypatch):
         "doc_id long, text string")
 
     monkeypatch.setattr(bpe, "BPE_STRICT_MAX_MERGES", 4)
-    calls = {"batched": 0}
-    # spy: the guard rewrites rounds_batch, observable via merges shape
-    merges_guarded, _ = bpe.bpe_train(docs, "text", num_merges=6)
-    merges_strict, _ = bpe.bpe_train(docs, "text", num_merges=6,
-                                     strict_unbounded=True)
+    # the guard rewrites rounds_batch, observable via merges shape, and
+    # says so at runtime
+    with pytest.warns(UserWarning, match="BPE_STRICT_MAX_MERGES") as rec:
+        merges_guarded, _ = bpe.bpe_train(docs, "text", num_merges=6)
+    assert "strict_unbounded=True" in str(rec[0].message)
+    assert rec[0].filename == __file__  # stacklevel points at the caller
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        merges_strict, _ = bpe.bpe_train(docs, "text", num_merges=6,
+                                         strict_unbounded=True)
     g = [(r["rank"], r["l"], r["r"]) for r in merges_guarded.collect()]
     s = [(r["rank"], r["l"], r["r"]) for r in merges_strict.collect()]
     assert len(g) == len(s) == 6
