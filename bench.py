@@ -133,7 +133,7 @@ def _steal_calib() -> float:
 #: the busy loop is steal-sensitive but BANDWIDTH-blind — sf1 q46
 #: committed 20.7 s in r9 from two clean-steal-calib passes that
 #: isolated adjudication put at 13.3 s). Derived empirically
-#: (tools/bw_calib_probe.py + a 16-thread memory-stream antagonist):
+#: (PLANS.md "Bandwidth-axis quiet gate" + a 16-thread antagonist):
 #: idle / idle-Spark min-of-2 samples cluster 0.041-0.067, the
 #: post-heavy-job GC tail brushes 0.074, and sustained streaming
 #: contention reads median 0.099 (two derivation runs; the
@@ -292,6 +292,23 @@ def _historical_floors() -> tuple[float | None, float | None]:
     return steal, bw
 
 
+def _calib_gate() -> dict[str, float]:
+    """Per-run gate thresholds on both axes (r10 measurement fix — see
+    _CALIB_BAD): floor = min of N startup samples on each axis;
+    threshold = REL × floor, never below the r9 absolute constants.
+    Contamination only reads high, so the min over a dozen samples
+    converges on the host's true machine constant even through a
+    moderately noisy startup window. A pass is accepted only when its
+    samples read below ``steal_bad`` AND ``bw_bad``."""
+    steal_samples = [_calib1() for _ in range(_CALIB_FLOOR_SAMPLES)]
+    bw_samples = [_bw_calib1() for _ in range(_CALIB_FLOOR_SAMPLES)]
+    steal_floor = min(steal_samples)
+    bw_floor = min(bw_samples)
+    return {"steal_floor": steal_floor, "bw_floor": bw_floor,
+            "steal_bad": max(_CALIB_BAD, round(_CALIB_REL * steal_floor, 4)),
+            "bw_bad": max(_BW_BAD, round(_BW_REL * bw_floor, 4))}
+
+
 #: a derived startup floor above this multiple of the best historical
 #: floor marks the derivation itself as suspect (contaminated startup
 #: window → loosened gate) in the artifact — visible, not silent.
@@ -317,18 +334,9 @@ def main() -> None:
         time.sleep(10.0)
         quiet_waited += 10.0
         la_start = _loadavg1()
-    # Per-run gate thresholds (r10 measurement fix — see _CALIB_BAD):
-    # floor = min of N startup samples on each axis; threshold = REL ×
-    # floor, never below the r9 absolute constants. Contamination only
-    # reads high, so the min over a dozen samples converges on the
-    # host's true machine constant even through a moderately noisy
-    # startup window.
-    steal_samples = [_calib1() for _ in range(_CALIB_FLOOR_SAMPLES)]
-    bw_samples = [_bw_calib1() for _ in range(_CALIB_FLOOR_SAMPLES)]
-    steal_floor = min(steal_samples)
-    bw_floor = min(bw_samples)
-    calib_bad = max(_CALIB_BAD, round(_CALIB_REL * steal_floor, 4))
-    bw_bad = max(_BW_BAD, round(_BW_REL * bw_floor, 4))
+    gate = _calib_gate()
+    steal_floor, bw_floor = gate["steal_floor"], gate["bw_floor"]
+    calib_bad, bw_bad = gate["steal_bad"], gate["bw_bad"]
     # Sanity-check the derived floors against the repo's best committed
     # floors (r10 ADVICE #4): if the whole startup window was
     # contaminated, the floor reads high and the gate silently loosens —

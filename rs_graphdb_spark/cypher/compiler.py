@@ -449,9 +449,11 @@ class Compiler:
         a = _ids(src_pat, es.src_label).withColumnRenamed("id", "src")
         b = _ids(dst_pat, es.dst_label).withColumnRenamed("id", "dst")
         pairs = a.crossJoin(b)
+        # materialized before it is appended to the edge table it was
+        # derived from (lineage rule, operators/dml.py)
         missing = pairs.join(
             es.df.select("src", "dst"), ["src", "dst"], "left_anti"
-        )
+        ).localCheckpoint(eager=True)
         edge_df = es.df
         if stmt.on_match:
             matched = pairs.join(es.df.select("src", "dst"), ["src", "dst"],
@@ -558,17 +560,15 @@ class Compiler:
         """FOREACH over a literal node-id list + SET
         (`src/cypher/executor.rs:1561-1623`): isin filter + merge update.
         The target label is recovered from the id namespace
-        (id // ID_STRIDE — graph.LABEL_INDEX)."""
-        from rs_graphdb_spark.graph import ID_STRIDE, LABEL_INDEX
+        (:func:`graph.label_of`)."""
+        from rs_graphdb_spark.graph import ID_STRIDE, label_of
 
         if not stmt.ids:  # FOREACH over [] is a no-op (foreach_test.rs:58)
             return self._copy()
-        idxs = {i // ID_STRIDE for i in stmt.ids}
-        if len(idxs) != 1:
+        if len({i // ID_STRIDE for i in stmt.ids}) != 1:
             raise CypherCompileError("FOREACH ids must share one label namespace")
-        rev = {v: k for k, v in LABEL_INDEX.items()}
-        label = rev.get(idxs.pop())
-        if label is None or label not in self.g.nodes:
+        label = label_of(self.g.nodes, stmt.ids[0])
+        if label is None:
             # raw dense ids (the reference's single-store model,
             # `tests/foreach_test.rs`): unambiguous when the graph has
             # exactly one node label
@@ -633,7 +633,7 @@ class Compiler:
                 "table — load at least one label first"
             )
         nodes = g.nodes.get(np.label)
-        nid = 1 if nodes is None else dml.next_id(nodes, "id")
+        nid = dml.next_node_id(g, np.label)
         row = dict(np.props)
         spark = next(iter(g.nodes.values())).sparkSession
         if row:

@@ -124,7 +124,7 @@ def _pairs(seq_col):
 #: tokenizer's 32k-100k merges (r8 VERDICT item #1). The kernel's
 #: per-word cost is O(word length), independent of merge-list size
 #: (rank-dict lookups), so per-token encode cost is near-FLAT on the
-#: merge axis (tools/bpe_scale_probe.py axis C).
+#: merge axis (PLANS.md "Round-9 Arrow-kernel BPE encode", merge-axis probe).
 _BPE_ARROW_MIN_MERGES = 64
 
 

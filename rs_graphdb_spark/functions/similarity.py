@@ -804,7 +804,8 @@ def quantize_embeddings(
     this takes an 8 KB array<double> row to ~1 KB of int codes + two
     doubles — the byte-reduction lever for every shuffle in the
     similarity family (LSH banding, pair scans, GEMM inputs), measured
-    as the width-axis remedy in tools/dim_scale_probe.py.
+    as the width-axis remedy in PLANS.md "Round-7 embedding-DIMENSION
+    scale probe".
 
     The (vec, mn, span) inputs are bound ONCE through the
     single-element-``transform`` idiom — a plain expression reference

@@ -91,6 +91,15 @@ def label_base(label: str) -> int:
     return idx * ID_STRIDE
 
 
+def label_of(labels, node_id: int) -> str | None:
+    """The label among ``labels`` whose id namespace (:func:`label_base`)
+    holds ``node_id``, or None — catalog and ad-hoc labels alike. An id
+    assigned in its label's namespace resolves; a raw dense id or a
+    client-supplied id outside its label's namespace does not."""
+    base = node_id - node_id % ID_STRIDE
+    return next((lb for lb in labels if label_base(lb) == base), None)
+
+
 #: driver-side registry of assigned ad-hoc namespace indexes → label, so a
 #: birthday collision between two md5 buckets raises instead of silently
 #: interleaving node ids (collision odds at 2^22 slots: ~0.012% for 1000

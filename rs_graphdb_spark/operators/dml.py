@@ -18,6 +18,8 @@ operations, each written once here (the reference's single store,
 - :func:`append_rows` — union new rows in; new property keys extend the
   table with NULLs on the existing rows;
 - :func:`next_id` — the next dense id, ``max + 1`` (1 on an empty table);
+  :func:`next_node_id` is its node form, which starts an empty label
+  inside the label's id namespace;
 - :func:`delete_ids` — anti-join node ids out of their label table and
   cascade to every incident edge set.
 
@@ -28,6 +30,13 @@ write raises ``ValueError`` naming the column and both types: left to
 Spark's union/CASE coercion, a string column written with a number turns
 ``bigint`` and every later read of the label fails its ANSI cast. The
 check compares schemas only; it runs no Spark job.
+
+Lineage rule: a key, victim or new-row frame derived from the table it
+rewrites is materialized (``localCheckpoint``) before it is joined or
+unioned back. Otherwise every SET, DELETE or MERGE embeds the table's
+whole plan twice, and a served label's plan doubles with each write.
+Literal-row appends (CREATE, HTTP batches) carry no such frame and stay
+job-free.
 """
 
 from __future__ import annotations
@@ -84,9 +93,11 @@ def set_props(df: DataFrame, cond: Column, updates: dict[str, Column]) -> DataFr
 def set_props_on(df: DataFrame, keys: DataFrame, updates: dict[str, Column]) -> DataFrame:
     """:func:`set_props` on the rows of ``df`` whose ``keys.columns``
     values appear in ``keys`` (distinct rows): a left join of a ``__m``
-    flag, no driver-side collect. Column order is kept, new keys last."""
+    flag, no driver-side collect. Column order is kept, new keys last.
+    ``keys`` is materialized first (lineage rule, module docstring)."""
     if not updates:
         return df
+    keys = keys.localCheckpoint(eager=True)
     flagged = df.join(keys.withColumn("__m", F.lit(True)), keys.columns, "left")
     added = [k for k in updates if k not in df.columns]
     return set_props(flagged, F.col("__m"), updates).select(*df.columns, *added)
@@ -107,10 +118,22 @@ def next_id(df: DataFrame, col: str) -> int:
     return 1 if top is None else int(top) + 1
 
 
+def next_node_id(graph: PropertyGraph, label: str) -> int:
+    """Next node id of ``label``: ``max(id) + 1``, or
+    ``label_base(label) + 1`` when the label has no table or no rows, so
+    nodes created on two new labels never share an id. One Spark job
+    when the table exists."""
+    nodes = graph.nodes.get(label)
+    top = None if nodes is None else nodes.agg(F.max("id")).first()[0]
+    return label_base(label) + 1 if top is None else int(top) + 1
+
+
 def delete_ids(graph: PropertyGraph, label: str, victims: DataFrame) -> PropertyGraph:
     """Delete the node ids in ``victims`` (one ``id`` column) from
     ``label`` and cascade to every edge set touching that label
-    (`src/storage/mem_store.rs:123-147`)."""
+    (`src/storage/mem_store.rs:123-147`). ``victims`` is materialized
+    first (lineage rule, module docstring)."""
+    victims = victims.localCheckpoint(eager=True)
     nodes = dict(graph.nodes)
     nodes[label] = graph.nodes[label].join(victims, "id", "left_anti")
     edges = {}
@@ -177,7 +200,7 @@ def merge_nodes(
             to_create = to_create.withColumn(c, v)
     created = to_create.select(
         (F.lit(label_base(label)) + F.col(key_col).cast("long")).alias("id"), "*"
-    )
+    ).localCheckpoint(eager=True)
     updated = existing
     if on_match:
         matched_keys = incoming.select(key_col).join(

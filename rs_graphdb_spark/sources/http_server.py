@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.cypher import ast, compiler
-from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.graph import EdgeSet, PropertyGraph, label_of
 from rs_graphdb_spark.operators import dml
 from rs_graphdb_spark.session import local_df
 from rs_graphdb_spark.sources.json_api import json_query, substring_search
@@ -100,13 +100,24 @@ def _catalog_counts(g: PropertyGraph) -> tuple[dict[str, int], dict[str, int]]:
 
 
 def _find_label(g: PropertyGraph, node_id: int) -> str:
-    for lb, df in g.nodes.items():
-        if not df.filter(F.col("id") == node_id).isEmpty():
+    """The label holding ``node_id``: one ``isEmpty`` probe per label,
+    the label whose namespace holds the id (:func:`label_of`) first."""
+    first = label_of(g.nodes, node_id)
+    rest = [lb for lb in g.nodes if lb != first]
+    for lb in ([first] if first else []) + rest:
+        if not g.nodes[lb].filter(F.col("id") == node_id).isEmpty():
             return lb
     raise KeyError(f"node {node_id}")
 
 
 def _node_rows(g: PropertyGraph, node_id: int) -> list[dict]:
+    """A node's rows: read straight from the label whose namespace holds
+    the id; only an id not found there goes through :func:`_find_label`."""
+    first = label_of(g.nodes, node_id)
+    if first is not None:
+        rows = _rows(g.nodes[first].filter(F.col("id") == node_id))
+        if rows:
+            return rows
     return _rows(g.nodes[_find_label(g, node_id)].filter(F.col("id") == node_id))
 
 
@@ -292,7 +303,7 @@ class GraphHTTPServer:
                 if "id" in props:
                     nid = int(props["id"])
                 else:  # dense next-id like the reference's counter
-                    nid = dml.next_id(g.nodes[label], "id") if label in g.nodes else 1
+                    nid = dml.next_node_id(g, label)
                 self._create_nodes(
                     [{"labels": [label], "properties": {**props, "id": nid}}]
                 )

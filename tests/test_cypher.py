@@ -252,6 +252,82 @@ def test_foreach_set(g):
     assert g2.nodes["Nation"].filter(F.col("n_name") == "LOOPED").count() == 2
 
 
+def test_new_labels_get_distinct_namespaced_ids(g):
+    # each new label starts inside its own id namespace, so nodes created
+    # on two new labels never share an id and an edge between them keeps
+    # distinct endpoints
+    from rs_graphdb_spark.graph import label_base
+
+    g2 = execute_cypher(execute_cypher(g, "CREATE (a:Alpha)"), "CREATE (b:Beta)")
+    a = g2.nodes["Alpha"].first()["id"]
+    b = g2.nodes["Beta"].first()["id"]
+    assert (a, b) == (label_base("Alpha") + 1, label_base("Beta") + 1)
+    g3 = execute_cypher(g, "CREATE (a:Gamma)-[:LINK]->(b:Delta)")
+    e = g3.edges["LINK"].df.first()
+    assert (e["src"], e["dst"]) == (label_base("Gamma") + 1, label_base("Delta") + 1)
+
+
+def test_label_of_resolves_namespaces(g):
+    from rs_graphdb_spark.graph import label_base, label_of
+
+    assert label_of(g.nodes, label_base("Nation") + 3) == "Nation"
+    assert label_of(g.nodes, label_base("Customer")) == "Customer"
+    assert label_of({"Alpha": None, "Beta": None}, label_base("Beta") + 1) == "Beta"
+    assert label_of({"Widget": None}, label_base("Widget") + 7) == "Widget"
+    assert label_of(g.nodes, 1) is None  # raw dense id: no namespace
+    assert label_of(g.nodes, label_base("Widget") + 7) is None  # not a label here
+
+
+def test_foreach_over_ids_of_new_label(g):
+    # ids created on an ad-hoc label resolve to it in a multi-label graph
+    g2 = execute_cypher(execute_cypher(g, "CREATE (a:Omega {k: 1})"),
+                        "CREATE (a:Omega {k: 2})")
+    ids = sorted(r["id"] for r in g2.nodes["Omega"].collect())
+    g3 = execute_cypher(g2, f"FOREACH (n IN {ids} | SET n.k = 0)")
+    assert sorted(r["k"] for r in g3.nodes["Omega"].collect()) == [0, 0]
+    assert g3.nodes["Customer"].count() == g.nodes["Customer"].count()
+
+
+def _plan_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().toString().splitlines())
+
+
+# A SET, DELETE or MERGE-rel joins a frame derived from the table it
+# rewrites back into it; unless that frame is materialized the plan
+# doubles with every write. Linear growth: every write of one kind adds
+# about as many plan lines as the first one did.
+
+def test_set_delete_grow_the_plan_linearly(g):
+    h = g
+    sizes = [_plan_lines(h.nodes["Customer"])]
+    for i in range(4):
+        h = execute_cypher(h, f"MATCH (c:Customer) WHERE c.c_custkey = {i + 1} "
+                              f"SET c.c_comment = 'w{i}'")
+        sizes.append(_plan_lines(h.nodes["Customer"]))
+    for i in range(4):
+        h = execute_cypher(h, f"MATCH (c:Customer) WHERE c.c_custkey = {i + 10} "
+                              "DELETE c")
+        sizes.append(_plan_lines(h.nodes["Customer"]))
+    steps = [b - a for a, b in zip(sizes, sizes[1:])]
+    assert max(steps[:4]) <= steps[0] + 4, sizes
+    assert max(steps[4:]) <= steps[4] + 4, sizes
+    assert h.nodes["Customer"].count() == g.nodes["Customer"].count() - 4
+    assert h.nodes["Customer"].filter(F.col("c_comment") == "w3").count() == 1
+
+
+def test_merge_rel_grows_the_plan_linearly(g):
+    h = g
+    sizes = [_plan_lines(h.edges["KNOWS"].df)]
+    for k in range(2, 6):
+        h = execute_cypher(h, "MERGE (a:Customer {c_custkey: 1})-[:KNOWS]->"
+                              f"(b:Customer {{c_custkey: {k}}})")
+        sizes.append(_plan_lines(h.edges["KNOWS"].df))
+    steps = [b - a for a, b in zip(sizes, sizes[1:])]
+    assert max(steps) <= steps[0] + 4, sizes
+    assert h.edges["KNOWS"].df.filter(F.col("src") == h.nodes["Customer"].filter(
+        F.col("c_custkey") == 1).first()["id"]).count() >= 4
+
+
 def test_call_subquery_passthrough(g):
     df = execute_cypher(
         g, "CALL { MATCH (n:Nation) WHERE n.n_regionkey = 1 "

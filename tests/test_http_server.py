@@ -252,6 +252,24 @@ def test_grpc_create_node_and_relationship(server):
     assert rel["start"] == nid and rel["end"] == nid and rel["rel_type"] == "SELF"
 
 
+def test_grpc_create_node_on_new_labels_gets_namespaced_ids(server):
+    """CreateNode without an id on two new labels: each node gets the
+    first id of its label's namespace, and GET reads it back."""
+    from rs_graphdb_spark.graph import label_base
+    from rs_graphdb_spark.sources import protowire as pw
+
+    ids = []
+    for lb in ("Kappa", "Lambda"):
+        status, blob = _post_pb(server, "/grpc/CreateNode",
+                                pw.encode_create_node_request([lb], {"x": 1}))
+        assert status == 200
+        ids.append(pw.decode_node(blob)["id"])
+    assert ids == [label_base("Kappa") + 1, label_base("Lambda") + 1]
+    status, _, raw = _get(server, f"/nodes/{ids[1]}")
+    assert status == 200
+    assert [(r["id"], r["x"]) for r in json.loads(raw)["rows"]] == [(ids[1], 1)]
+
+
 def _get(server, path):
     with urllib.request.urlopen(f"http://127.0.0.1:{server.port}{path}") as r:
         ct = r.headers.get("Content-Type", "")

@@ -178,10 +178,13 @@ def test_merge_empty_db(spark):
 
 
 def test_merge_new_label_creates_it(spark):
-    # a label the graph lacks matches nothing: MERGE opens it, like CREATE
+    # a label the graph lacks matches nothing: MERGE opens it, like CREATE;
+    # its first id is the first one in the label's namespace
+    from rs_graphdb_spark.graph import label_base
+
     q = "MERGE (n:Q {x: 1})"
     g = execute_cypher(execute_cypher(_person_graph(spark), q), q)
-    assert [(r["id"], r["x"]) for r in g.nodes["Q"].collect()] == [(1, 1)]
+    assert [(r["id"], r["x"]) for r in g.nodes["Q"].collect()] == [(label_base("Q") + 1, 1)]
     assert g.nodes["Person"].count() == 3
 
 

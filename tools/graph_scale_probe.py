@@ -19,16 +19,19 @@ star contraction), triangle count (canonical-edge join), k-core peel
 
 Usage: python tools/graph_scale_probe.py [base_nodes] [rungs]
 (defaults 10_000 and 3 → 100k / 1M / 10M edge draws).
-Prints one markdown row per (algorithm, rung) for PLANS.md.
+Each algorithm is timed by ``isolated_probe.gated_passes`` (min of the
+passes accepted by bench.py's two-axis calibration gate). Prints one
+markdown row per (algorithm, rung) for PLANS.md.
 """
 
 from __future__ import annotations
 
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from isolated_probe import _calib_gate, gated_passes  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -80,6 +83,7 @@ def main() -> None:
 
     spark = get_spark("graph-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
+    gate = _calib_gate()
 
     for r in range(rungs):
         n = base * 10 ** r
@@ -87,11 +91,12 @@ def main() -> None:
         ne = edges.count()
 
         def probe(tag, fn):
-            t0 = time.time()
-            rows = fn().count()
+            rows = []
+            res = gated_passes(spark.sparkContext, tag,
+                               lambda: rows.append(fn().count()), gate)
             print(
-                f"| {tag} | {n:,} nodes / {ne:,} edges | {rows:,} rows"
-                f" | {time.time() - t0:.1f} s |",
+                f"| {tag} | {n:,} nodes / {ne:,} edges | {rows[-1]:,} rows"
+                f" | {res['min']:.1f} s |",
                 flush=True,
             )
 
