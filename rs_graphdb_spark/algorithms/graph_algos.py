@@ -6,7 +6,7 @@ DataFrame-Pregel / canonical-edge joins, never adjacency HashMaps.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.algorithms.pregel import pregel
@@ -120,21 +120,40 @@ def connected_components(
     Convergence signature sums run in DECIMAL(38,0): with 64-bit id
     namespaces a BIGINT sum overflows at ~10^6 rows and ANSI mode turns
     that into a job-killing ARITHMETIC_OVERFLOW (found by the 10× scale
-    probe, PLANS.md).
+    probe, PLANS.md). The signature, and the first edge set's emptiness,
+    are observed on the checkpoint jobs (``Observation``) instead of
+    being jobs of their own.
     """
+    first = Observation()
     e = (
         _undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .distinct()
+        .observe(first, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
 
     def _dec(c):
         return F.sum(F.col(c).cast("decimal(38,0)"))
 
+    # pair-sensitive convergence signature: count + per-column sums
+    # alone can collide (two child→parent pairs swapping parents keeps
+    # all three), so also sum an order-independent per-ROW hash of
+    # (u, v) — any change to the edge multiset moves it (r2 advice #2)
+    pair_hash = F.conv(
+        F.substring(F.md5(F.concat_ws(":", F.col("u"), F.col("v"))), 1, 12),
+        16,
+        10,
+    ).cast("decimal(38,0)")
+    signature = (
+        F.count(F.lit(1)).alias("n"),
+        _dec("u").alias("su"),
+        _dec("v").alias("sv"),
+        F.sum(pair_hash).alias("sh"),
+    )
     prev = None
-    converged = e.isEmpty()
+    converged = first.get["n"] == 0
     for _ in range(max_rounds):
         if converged:
             break
@@ -157,32 +176,17 @@ def connected_components(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         ).distinct()
         mins = dir_e.groupBy("u").agg(F.min("v").alias("m"))
+        sig = Observation()
         e = (
             dir_e.join(mins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(mins.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
+            .observe(sig, *signature)
             .localCheckpoint(eager=True)
         )
-        # pair-sensitive convergence signature: count + per-column sums
-        # alone can collide (two child→parent pairs swapping parents keeps
-        # all three), so also sum an order-independent per-ROW hash of
-        # (u, v) — any change to the edge multiset moves it (r2 advice #2)
-        pair_hash = F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.col("u"), F.col("v"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("decimal(38,0)")
-        sig = e.agg(
-            F.count("*").alias("n"),
-            _dec("u").alias("su"),
-            _dec("v").alias("sv"),
-            F.sum(pair_hash).alias("sh"),
-        ).first()
-        cur = (sig["n"], sig["su"], sig["sv"], sig["sh"])
+        cur = tuple(sig.get[k] for k in ("n", "su", "sv", "sh"))
         if cur == prev:
             converged = True
         prev = cur
@@ -303,9 +307,8 @@ def k_core(nodes: DataFrame, edges: DataFrame, k: int, max_iter: int = 100
             .select("id", F.col("agg").alias("degree"))
         )
 
-    def stable(old: DataFrame, new: DataFrame) -> bool:
-        n_new = new.count()
-        return n_new == old.count() or n_new == 0
+    def stable(n_old: int, n_new: int) -> bool:
+        return n_new == n_old or n_new == 0
 
     return pregel(alive, und, F.lit(1), F.count, peel, max_iter, stable)
 

@@ -11,7 +11,10 @@ re-expression is bulk-synchronous message passing over DataFrames:
 Each superstep is one shuffle (the groupBy); vertex state is checkpointed
 every ``CHECKPOINT_EVERY`` supersteps and after the last one to truncate
 lineage — the standard driver pattern Catalyst cannot express in a single
-plan (SURVEY.md §4.3.1).
+plan (SURVEY.md §4.3.1). A loop with a convergence test checkpoints every
+superstep and reads the new state's row count off that checkpoint's own
+job (``pyspark.sql.Observation``), so the test costs no job of its own:
+the Pregelix way of ending on an unchanged state (VLDB 2014).
 
 Callers (``algorithms.graph_algos``): ``pagerank`` (unweighted and
 ``weight_col``), ``personalized_pagerank``, ``label_propagation`` and
@@ -33,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 CHECKPOINT_EVERY = 5
@@ -46,7 +49,7 @@ def pregel(
     agg_msg: Callable[[Column], Column],
     update: Callable[[DataFrame, DataFrame], DataFrame],
     max_iter: int,
-    until_converged: Callable[[DataFrame, DataFrame], bool] | None = None,
+    until_converged: Callable[[int, int], bool] | None = None,
 ) -> DataFrame:
     """Generic BSP loop.
 
@@ -55,9 +58,11 @@ def pregel(
     msg_expr: built from src-state and edge columns, evaluated on
     vertices⋈edges; agg_msg: aggregator over ``msg`` per dst; update:
     (vertices, messages(id, agg)) → new vertices. ``until_converged``
-    (old, new) → bool stops early; the new state is then checkpointed
-    every superstep, since the convergence test reads it.
+    (old row count, new row count) → bool stops early; the new state is
+    then checkpointed every superstep and its row count observed on that
+    checkpoint, so only the input's count is a job of its own.
     """
+    n_old = None if until_converged is None else vertices.count()
     for i in range(max_iter):
         msgs = (
             vertices.join(edges, vertices["id"] == edges["src"])
@@ -66,13 +71,16 @@ def pregel(
             .agg(agg_msg(F.col("msg")).alias("agg"))
         )
         new_vertices = update(vertices, msgs)
-        if (
-            until_converged is not None
-            or (i + 1) % CHECKPOINT_EVERY == 0
-            or i == max_iter - 1
-        ):
+        if until_converged is not None:
+            rows = Observation()
+            new_vertices = new_vertices.observe(
+                rows, F.count(F.lit(1)).alias("n")
+            ).localCheckpoint(eager=True)
+            n_new = rows.get["n"]
+            if until_converged(n_old, n_new):
+                return new_vertices
+            n_old = n_new
+        elif (i + 1) % CHECKPOINT_EVERY == 0 or i == max_iter - 1:
             new_vertices = new_vertices.localCheckpoint(eager=True)
-        if until_converged is not None and until_converged(vertices, new_vertices):
-            return new_vertices
         vertices = new_vertices
     return vertices

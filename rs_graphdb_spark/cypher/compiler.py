@@ -664,7 +664,10 @@ class Compiler:
         """CREATE (a:L {..})-[:T]->(b:L {..}): unconditionally create BOTH
         endpoint nodes and the relationship (reference create-path form,
         `tests/cypher_delete_test.rs:41-45`). A previously-unseen rel type
-        opens a new EdgeSet between the pattern labels."""
+        opens a new EdgeSet between the pattern labels. An endpoint id
+        outside the namespace of its side's declared label raises
+        (namespace rule, `operators/dml.py`): `(:Order)-[:KNOWS]->` into
+        a Customer→Customer set."""
         (rel, dst_node) = stmt.path.hops[0]
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
@@ -675,6 +678,11 @@ class Compiler:
         spark = next(iter(g.nodes.values())).sparkSession
         if rel.rel_type in g.edges:
             es = g.edges[rel.rel_type]
+            try:
+                dml.check_namespace(es.src_label, [sid], f"{rel.rel_type} src")
+                dml.check_namespace(es.dst_label, [did], f"{rel.rel_type} dst")
+            except ValueError as exc:
+                raise CypherCompileError(str(exc)) from None
             new = local_df(spark, [(dml.next_id(es.df, "edge_id"), sid, did)],
                            "edge_id long, src long, dst long")
             g.edges[rel.rel_type] = dc_replace(es, df=dml.append_rows(es.df, new))

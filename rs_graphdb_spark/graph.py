@@ -91,6 +91,18 @@ def label_base(label: str) -> int:
     return idx * ID_STRIDE
 
 
+#: The wildcard label. An edge side declared ``"Node"`` holds ids of any
+#: label (HTTP and gRPC open a new rel type with it on both sides), and a
+#: node written under it may carry any id.
+ANY_LABEL = "Node"
+
+
+def holds(side_label: str, label: str) -> bool:
+    """Whether an edge side declared ``side_label`` may hold ids of
+    ``label``: its own label, or the :data:`ANY_LABEL` wildcard."""
+    return side_label in (label, ANY_LABEL)
+
+
 def label_of(labels, node_id: int) -> str | None:
     """The label among ``labels`` whose id namespace (:func:`label_base`)
     holds ``node_id``, or None — catalog and ad-hoc labels alike. An id
@@ -127,6 +139,16 @@ class EdgeSet:
 
     Mirrors the reference Relationship (`src/graph/model.rs:22-28`) with the
     type factored out into the table identity.
+
+    Endpoint namespace rule: a ``src`` (``dst``) id in a label's id
+    namespace belongs to ``src_label`` (``dst_label``); a side declared
+    ``"Node"`` (:data:`ANY_LABEL`) is a wildcard that holds any id, and
+    ids below ``ID_STRIDE`` (raw client ids) lie outside every namespace
+    and may sit on any side. Writes that take client ids or append
+    endpoints check it on the driver (``operators.dml.check_namespace``),
+    so a node's edges sit only in the sets with a side that :func:`holds`
+    its label: ``/neighbors`` scans just those, and a DELETE cascades
+    into just those.
     """
 
     df: DataFrame

@@ -21,7 +21,7 @@ operations, each written once here (the reference's single store,
   :func:`next_node_id` is its node form, which starts an empty label
   inside the label's id namespace;
 - :func:`delete_ids` — anti-join node ids out of their label table and
-  cascade to every incident edge set.
+  cascade to every edge set with a side that can hold them.
 
 Type rule (:func:`set_props` and :func:`append_rows`): a value's type
 must equal its column's type, except that a numeric value may go into a
@@ -30,6 +30,14 @@ write raises ``ValueError`` naming the column and both types: left to
 Spark's union/CASE coercion, a string column written with a number turns
 ``bigint`` and every later read of the label fails its ANSI cast. The
 check compares schemas only; it runs no Spark job.
+
+Namespace rule (:func:`check_namespace`, the endpoint rule of
+``graph.EdgeSet``): an id in a label's id namespace may be written only
+under that label, as a node of it or on an edge side declared with it.
+Ids below ``ID_STRIDE`` and the ``"Node"`` wildcard side accept any id.
+A violation raises ``ValueError``. HTTP, gRPC and Cypher CREATE check
+the literal ids they write, on the driver; the other routes write ids
+read from a label table, which the rule already covers.
 
 Lineage rule: a key, victim or new-row frame derived from the table it
 rewrites is materialized (``localCheckpoint``) before it is joined or
@@ -48,7 +56,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, NullType, NumericType, StructType
 
-from rs_graphdb_spark.graph import PropertyGraph, label_base
+from rs_graphdb_spark.graph import ANY_LABEL, ID_STRIDE, PropertyGraph, holds, label_base
 
 
 def _fits(value: DataType, column: DataType) -> bool:
@@ -72,6 +80,19 @@ def _check_types(df: DataFrame, values: StructType) -> None:
             raise ValueError(
                 f"column {f.name!r} is {col.simpleString()}; cannot write a "
                 f"{f.dataType.simpleString()} value into it"
+            )
+
+
+def check_namespace(label: str, ids, what: str = "id") -> None:
+    """The namespace rule (module docstring) over literal ids written
+    under ``label``; ``what`` names them in the error. No Spark job."""
+    if label == ANY_LABEL:
+        return
+    base = label_base(label)
+    for i in ids:
+        if i >= ID_STRIDE and i - i % ID_STRIDE != base:
+            raise ValueError(
+                f"{what} {i} lies outside the {label!r} id namespace"
             )
 
 
@@ -130,18 +151,18 @@ def next_node_id(graph: PropertyGraph, label: str) -> int:
 
 def delete_ids(graph: PropertyGraph, label: str, victims: DataFrame) -> PropertyGraph:
     """Delete the node ids in ``victims`` (one ``id`` column) from
-    ``label`` and cascade to every edge set touching that label
-    (`src/storage/mem_store.rs:123-147`). ``victims`` is materialized
-    first (lineage rule, module docstring)."""
+    ``label`` and cascade to every edge side declared ``label`` or the
+    ``"Node"`` wildcard (`src/storage/mem_store.rs:123-147`). ``victims``
+    is materialized first (lineage rule, module docstring)."""
     victims = victims.localCheckpoint(eager=True)
     nodes = dict(graph.nodes)
     nodes[label] = graph.nodes[label].join(victims, "id", "left_anti")
     edges = {}
     for rel, es in graph.edges.items():
         df = es.df
-        if es.src_label == label:
+        if holds(es.src_label, label):
             df = df.join(victims.withColumnRenamed("id", "src"), "src", "left_anti")
-        if es.dst_label == label:
+        if holds(es.dst_label, label):
             df = df.join(victims.withColumnRenamed("id", "dst"), "dst", "left_anti")
         edges[rel] = dc_replace(es, df=df)
     return dc_replace(graph, nodes=nodes, edges=edges)

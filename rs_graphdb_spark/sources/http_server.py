@@ -24,6 +24,18 @@ executes). Single-row POSTs exist for API parity; the scale path is the
 `/batch/*` endpoints (one union per request, not per row), mirroring the
 reference's `batch_create_nodes` (`src/graph/db.rs:170-203`).
 
+Id namespaces: a node id at or above ``graph.ID_STRIDE`` lies in one
+label's namespace, and every write here keeps it there (the endpoint
+namespace rule of ``graph.EdgeSet``, checked by
+``dml.check_namespace``). A node POST under another label, or an edge
+POST whose ``src``/``dst`` lies outside the namespace of the rel type's
+declared side, answers 400 and leaves the served graph as it was. A new
+rel type is opened with ``"Node"`` on both sides, and ``"Node"`` is a
+wildcard that takes any id; ids below ``ID_STRIDE`` (raw client ids)
+lie outside every namespace and go anywhere. The rule lets
+``/nodes/<id>/neighbors`` scan only the edge sets with a side that can
+hold the id, and lets a DELETE cascade into exactly those sets.
+
 Thread-safety: Spark DataFrame actions are thread-safe on one
 SparkSession, and a swap of the served graph is one attribute store. So
 reads (every GET, POST `/query` and `/search`, and a Cypher statement
@@ -43,9 +55,11 @@ from __future__ import annotations
 
 import json
 import logging
+import operator
 import re
 import threading
 from dataclasses import replace as dc_replace
+from functools import reduce
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.errors import AnalysisException
@@ -53,7 +67,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.cypher import ast, compiler
-from rs_graphdb_spark.graph import EdgeSet, PropertyGraph, label_of
+from rs_graphdb_spark.graph import ANY_LABEL, EdgeSet, PropertyGraph, holds, label_of
 from rs_graphdb_spark.operators import dml
 from rs_graphdb_spark.session import local_df
 from rs_graphdb_spark.sources.json_api import json_query, substring_search
@@ -121,31 +135,45 @@ def _node_rows(g: PropertyGraph, node_id: int) -> list[dict]:
     return _rows(g.nodes[_find_label(g, node_id)].filter(F.col("id") == node_id))
 
 
-def _neighbors(g: PropertyGraph, node_id: int) -> DataFrame:
+def _neighbors(g: PropertyGraph, node_id: int) -> DataFrame | None:
     """Out- and in-neighbor ids over every rel type
-    (`get_node_neighbors`, `src/server.rs`). One scan per edge set: the
-    rows touching ``node_id`` fan out to an ``out`` row when it is the
-    source and an ``in`` row when it is the target (both for a
-    self-loop), so a derived edge set is built once per request."""
+    (`get_node_neighbors`, `src/server.rs`), or None when no edge set
+    can hold ``node_id``. Only the edge sides that can hold the id are
+    scanned: with ``L`` the label whose namespace holds it
+    (:func:`label_of`), a side declared ``L`` or ``"Node"`` (the
+    wildcard); the endpoint namespace rule on writes (module docstring)
+    makes this exact. An id outside every namespace scans every side.
+    One scan per edge set: the rows touching ``node_id`` fan out to an
+    ``out`` row when it is the source and an ``in`` row when it is the
+    target (both for a self-loop), so a derived edge set is built once
+    per request."""
+    label = label_of(g.nodes, node_id)
     src, dst = F.col("src"), F.col("dst")
     parts = []
     for rt, es in g.edges.items():
-        sides = F.array(
-            F.struct(dst.alias("id"), F.lit("out").alias("direction"),
-                     (src == node_id).alias("hit")),
-            F.struct(src.alias("id"), F.lit("in").alias("direction"),
-                     (dst == node_id).alias("hit")),
-        )
+        sides = [
+            (own == node_id, other, direction)
+            for own, other, direction, side in ((src, dst, "out", es.src_label),
+                                                (dst, src, "in", es.dst_label))
+            if label is None or holds(side, label)
+        ]
+        if not sides:
+            continue
+        touches = reduce(operator.or_, [hit for hit, _, _ in sides])
+        fan = F.array(*[
+            F.struct(other.alias("id"), F.lit(direction).alias("direction"),
+                     hit.alias("hit"))
+            for hit, other, direction in sides
+        ])
         parts.append(
-            es.df.filter((src == node_id) | (dst == node_id))
-            .select(F.inline(sides))
+            es.df.filter(touches)
+            .select(F.inline(fan))
             .filter("hit")
             .select("id", F.lit(rt).alias("rel_type"), "direction")
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("rel_type", "direction", "id")
+    if not parts:
+        return None
+    return reduce(DataFrame.unionByName, parts).orderBy("rel_type", "direction", "id")
 
 
 def _find_rel_type(g: PropertyGraph, edge_id: int) -> str:
@@ -296,7 +324,7 @@ class GraphHTTPServer:
             return None
         if path == "/grpc/CreateNode":
             req = pw.decode_create_node_request(body)
-            label = (req["labels"] or ["Node"])[0]
+            label = (req["labels"] or [ANY_LABEL])[0]
             props = dict(req["properties"])
             with self._lock:
                 g = self.graph
@@ -396,7 +424,8 @@ class GraphHTTPServer:
             if m := _NODE_ID.match(path):
                 return {"rows": _node_rows(g, int(m.group(1)))}
             if m := _NODE_NEIGHBORS.match(path):
-                return {"rows": _rows(_neighbors(g, int(m.group(1))))}
+                nb = _neighbors(g, int(m.group(1)))
+                return {"rows": [] if nb is None else _rows(nb)}
             if path == "/rels":
                 # ONE unioned limited query = one Spark job for the route
                 # (was a collect per rel-type, r2 verdict anti-pattern #2);
@@ -469,11 +498,13 @@ class GraphHTTPServer:
         spark = next(iter(self.graph.nodes.values())).sparkSession
         by_label: dict[str, list[dict]] = {}
         for it in items:
-            label = (it.get("labels") or ["Node"])[0]
+            label = (it.get("labels") or [ANY_LABEL])[0]
             props = dict(it.get("properties", {}))
             if "id" not in props:
                 raise ValueError("node creation requires properties.id")
             by_label.setdefault(label, []).append(props)
+        for label, rows in by_label.items():
+            dml.check_namespace(label, [int(r["id"]) for r in rows], "node id")
         with self._lock:
             nodes = dict(self.graph.nodes)
             created = 0
@@ -504,13 +535,16 @@ class GraphHTTPServer:
             edges = dict(self.graph.edges)
             created = 0
             for rt, rows in by_type.items():
+                es = edges.get(rt)
+                dml.check_namespace(es.src_label if es else ANY_LABEL,
+                                    [s for _, s, _ in rows], f"{rt} src")
+                dml.check_namespace(es.dst_label if es else ANY_LABEL,
+                                    [d for _, _, d in rows], f"{rt} dst")
                 new = local_df(spark, rows, "edge_id long, src long, dst long")
-                if rt in edges:
-                    edges[rt] = dc_replace(
-                        edges[rt], df=dml.append_rows(edges[rt].df, new)
-                    )
-                else:
-                    edges[rt] = EdgeSet(df=new, src_label="Node", dst_label="Node")
+                edges[rt] = (
+                    dc_replace(es, df=dml.append_rows(es.df, new)) if es
+                    else EdgeSet(df=new, src_label=ANY_LABEL, dst_label=ANY_LABEL)
+                )
                 created += len(rows)
             # client-supplied (src, dst) endpoints are not validated to
             # exist → a dangling endpoint breaks the 1:1 premise of the

@@ -52,7 +52,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.graph import EdgeSet, PropertyGraph, holds
 from rs_graphdb_spark.operators.dml import set_props_on
 
 #: dataset partition column (lives in directory names, never in data files)
@@ -381,7 +381,8 @@ def delete_nodes_partitioned(
     1. one partition-pruned scan finds the victims (three-valued WHERE:
        survivors are the anti-join complement, so NULL predicates keep
        rows — same semantics as :func:`operators.dml.delete_nodes`);
-    2. the node table and every SRC-side edge table stage new versions
+    2. the node table and every SRC-side edge table (a side declared
+       ``label`` or the ``"Node"`` wildcard) stage new versions
        of exactly the victims' ``pmod(id, n)`` buckets (shared
        arithmetic — no scan);
     3. DST-side edge tables are partitioned by src, so victim dst
@@ -413,7 +414,7 @@ def delete_nodes_partitioned(
     for rt, info in manifest["edges"].items():
         edge_rel = manifest["tables"][f"edges/{rt}"]
         touched = edge_rel
-        if info["src_label"] == label:
+        if holds(info["src_label"], label):
             staged = _rewrite_buckets(
                 spark, path, touched, vb,
                 lambda df: df.join(
@@ -423,7 +424,7 @@ def delete_nodes_partitioned(
             if staged:
                 updates[f"edges/{rt}"] = staged
                 touched = staged
-        if info["dst_label"] == label:
+        if holds(info["dst_label"], label):
             hit = (
                 spark.read.option("mergeSchema", "true")
                 .parquet(f"{path}/{touched}")

@@ -278,6 +278,34 @@ def test_label_of_resolves_namespaces(g):
     assert label_of(g.nodes, label_base("Widget") + 7) is None  # not a label here
 
 
+def test_create_rel_endpoint_outside_its_sides_namespace_raises(g):
+    # KNOWS is Customer→Customer: an Order id on its src side would hide
+    # the edge from the Order's /neighbors scan and from its DELETE cascade
+    from rs_graphdb_spark.cypher.compiler import CypherCompileError
+
+    with pytest.raises(CypherCompileError, match="KNOWS src .* 'Customer'"):
+        execute_cypher(g, "CREATE (a:Order)-[:KNOWS]->(b:Customer)")
+    with pytest.raises(CypherCompileError, match="KNOWS dst"):
+        execute_cypher(g, "CREATE (a:Customer)-[:KNOWS]->(b:Order)")
+    g2 = execute_cypher(g, "CREATE (a:Customer)-[:KNOWS]->(b:Customer)")
+    assert g2.edges["KNOWS"].df.count() == g.edges["KNOWS"].df.count() + 1
+
+
+def test_namespace_rule():
+    from rs_graphdb_spark.graph import ID_STRIDE, label_base
+    from rs_graphdb_spark.operators.dml import check_namespace
+
+    cust = label_base("Customer") + 5
+    check_namespace("Customer", [cust, label_base("Customer")])
+    check_namespace("Node", [cust])  # the wildcard takes any id
+    check_namespace("Order", [900020, 0, -3])  # raw ids lie in no namespace
+    check_namespace("Widget", [label_base("Widget") + 1])
+    for label, bad in (("Order", cust), ("Customer", 10 * ID_STRIDE),
+                       ("Customer", label_base("Customer") + ID_STRIDE)):
+        with pytest.raises(ValueError, match=f"lies outside the '{label}'"):
+            check_namespace(label, [1, bad])
+
+
 def test_foreach_over_ids_of_new_label(g):
     # ids created on an ad-hoc label resolve to it in a multi-label graph
     g2 = execute_cypher(execute_cypher(g, "CREATE (a:Omega {k: 1})"),

@@ -546,6 +546,9 @@ def test_neighbors_self_loop_is_both_out_and_in(server):
 
 
 def test_neighbors_plan_scans_each_edge_set_once(spark):
+    """Each edge set with a side that can hold the id is scanned once, and
+    only those: a namespaced id reads its label's sets, a raw id reads
+    every set, and a label with no incident set reads none."""
     from rs_graphdb_spark.graph import label_base
     from rs_graphdb_spark.sources.http_server import _neighbors
 
@@ -553,7 +556,120 @@ def test_neighbors_plan_scans_each_edge_set_once(spark):
         return df._jdf.queryExecution().optimizedPlan().collectLeaves().size()
 
     g = load_tpch_graph(spark, SF)
+    incident = {
+        "Customer": {"PLACED", "CUST_NATION", "KNOWS", "SEGMENT_RING"},
+        "Order": {"PLACED", "CONTAINS", "NEXT_ORDER"},
+    }
+    for label, rel_types in incident.items():
+        assert rel_types == {rt for rt, es in g.edges.items()
+                             if label in (es.src_label, es.dst_label)}
+        node_id = label_base(label) + 5
+        assert leaves(_neighbors(g, node_id)) == sum(
+            leaves(g.edges[rt].df) for rt in rel_types)
     per_set = sum(leaves(es.df) for es in g.edges.values())
-    node_id = label_base("Customer") + 19
-    assert leaves(_neighbors(g, node_id)) == per_set
-    assert leaves(_two_branch_neighbors(g, node_id)) == 2 * per_set
+    assert leaves(_neighbors(g, 900020)) == per_set
+    assert leaves(_two_branch_neighbors(g, 900020)) == 2 * per_set
+    assert _neighbors(g, label_base("Document") + 1) is None
+
+
+def test_pruned_neighbors_match_full_scan(server):
+    """The pruned scan answers exactly what a scan of every edge set does:
+    ids of every catalog label, of a label created by Cypher, raw ids, a
+    namespaced id on a "Node"-typed rel (self-loop included), and labels
+    with no incident set."""
+    from rs_graphdb_spark.graph import label_base
+    from rs_graphdb_spark.sources.http_server import _neighbors
+
+    cust = label_base("Customer")
+    assert _call(server, "POST", "/cypher", {
+        "query": "CREATE (a:Gadget {name: 'g1'})-[:PLUGS]->(b:Gadget {name: 'g2'})",
+    })[0] == 200
+    _call(server, "POST", "/batch/rels", {"rels": [
+        {"rel_type": "TAGGED", "edge_id": 990050, "src": cust + 19, "dst": 900050},
+        {"rel_type": "TAGGED", "edge_id": 990051, "src": cust + 7, "dst": cust + 7},
+    ]})
+    g = server.graph
+    gadgets = [r["id"] for r in g.nodes["Gadget"].select("id").collect()]
+    firsts = [g.nodes[lb].select("id").first()["id"] for lb in sorted(g.nodes)]
+    ids = [*firsts, *gadgets, cust + 19, cust + 7, label_base("Order") + 5,
+           label_base("Part") + 3, 900020, 900030, 900050]
+    for node_id in ids:
+        want = [r.asDict() for r in _two_branch_neighbors(g, node_id).collect()]
+        nb = _neighbors(g, node_id)
+        got = [] if nb is None else [r.asDict() for r in nb.collect()]
+        assert got == want, node_id
+    rows = _call(server, "GET", f"/nodes/{cust + 7}/neighbors")[1]["rows"]
+    assert {"id": cust + 7, "rel_type": "TAGGED", "direction": "in"} in rows
+    assert {"id": cust + 7, "rel_type": "TAGGED", "direction": "out"} in rows
+    doc = label_base("Document") + 1
+    assert _call(server, "GET", f"/nodes/{doc}/neighbors")[1]["rows"] == []
+
+
+# -- the endpoint namespace rule on writes --------------------------------------
+
+def test_writes_outside_a_sides_namespace_answer_400(server):
+    """An edge whose endpoint lies in another label's namespace than its
+    side declares, or a node posted under another label than its id's
+    namespace, answers 400 and leaves the served graph as it was."""
+    from rs_graphdb_spark.graph import label_base
+    from rs_graphdb_spark.sources import protowire as pw
+
+    order, cust = label_base("Order") + 5, label_base("Customer") + 19
+    _, before = _call(server, "GET", "/stats")
+    graph = server.graph
+    for path, body in (
+        ("/rels", {"rel_type": "KNOWS", "edge_id": 990060, "src": order, "dst": cust}),
+        ("/batch/rels", {"rels": [
+            {"rel_type": "KNOWS", "edge_id": 990061, "src": cust, "dst": cust + 1},
+            {"rel_type": "KNOWS", "edge_id": 990062, "src": cust, "dst": order},
+        ]}),
+        ("/nodes", {"labels": ["Customer"], "properties": {"id": order}}),
+        ("/batch/nodes", {"nodes": [
+            {"labels": ["Customer"], "properties": {"id": cust + 900000}},
+            {"labels": ["Part"], "properties": {"id": cust + 900001}},
+        ]}),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _call(server, "POST", path, body)
+        with e.value as err:
+            assert err.code == 400 and "id namespace" in err.read().decode(), path
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post_pb(server, "/grpc/CreateRelationship",
+                 pw.encode_create_rel_request(order, cust, "KNOWS", {}))
+    with e.value as err:
+        assert err.code == 400
+    assert server.graph is graph
+    assert _call(server, "GET", "/stats")[1] == before
+
+
+def test_delete_cascades_into_wildcard_edge_sets(server):
+    """A rel type opened over HTTP declares "Node" sides; deleting one of
+    its endpoints removes the edge."""
+    _call(server, "POST", "/batch/nodes", {"nodes": [
+        {"labels": ["Widget"], "properties": {"id": 900040, "name": "a"}},
+        {"labels": ["Widget"], "properties": {"id": 900041, "name": "b"}},
+    ]})
+    _call(server, "POST", "/rels", {
+        "rel_type": "LINKS", "edge_id": 990040, "src": 900040, "dst": 900041})
+    _call(server, "DELETE", "/nodes/900040")
+    rows = _call(server, "GET", "/nodes/900041/neighbors")[1]["rows"]
+    assert all(r["id"] != 900040 for r in rows), rows
+    assert _status(server, "GET", "/rels/990040") == 404
+
+
+def test_deleted_order_leaves_no_knows_edge(server):
+    """A KNOWS edge can never hold an Order id, so deleting that Order
+    leaves no dangling KNOWS edge behind."""
+    from pyspark.sql import functions as F
+
+    from rs_graphdb_spark.graph import label_base
+
+    g = server.graph
+    order = g.nodes["Order"].select("id").orderBy(F.desc("id")).first()["id"]
+    cust = label_base("Customer") + 23
+    status = _status(server, "POST", "/rels", {
+        "rel_type": "KNOWS", "edge_id": 990070, "src": order, "dst": cust})
+    _call(server, "DELETE", f"/nodes/{order}")
+    knows = server.graph.edges["KNOWS"].df
+    assert knows.filter((F.col("src") == order) | (F.col("dst") == order)).count() == 0
+    assert status == 400

@@ -318,6 +318,36 @@ def test_partitioned_delete_touches_only_victim_buckets(spark, graph, tmpdir):
             assert after_e[rel_path] == digest, rel_path
 
 
+def test_partitioned_delete_cascades_into_wildcard_sides(spark, graph, tmpdir):
+    """A "Node"-declared side holds ids of any label, so a partitioned
+    DELETE cascades into it, as the lineage DML does."""
+    from dataclasses import replace
+
+    from rs_graphdb_spark.graph import EdgeSet, label_base
+    from rs_graphdb_spark.operators.dml import delete_nodes
+    from rs_graphdb_spark.session import local_df
+    from rs_graphdb_spark.sources.partitioned_dml import (
+        delete_nodes_partitioned,
+        load_graph_partitioned,
+        save_graph_partitioned,
+    )
+
+    cust = label_base("Customer")
+    tagged = EdgeSet(df=local_df(spark, [(1, cust + 97, 900001), (2, 900001, cust + 97),
+                                         (3, cust + 5, 900001)],
+                                 "edge_id long, src long, dst long"),
+                     src_label="Node", dst_label="Node")
+    g = replace(graph, edges={**graph.edges, "TAGGED": tagged})
+    path = str(tmpdir / "pg")
+    save_graph_partitioned(g, path, id_buckets=8)
+    cond = F.col("c_custkey") == 97
+    assert delete_nodes_partitioned(spark, path, "Customer", cond) == 1
+    got = load_graph_partitioned(spark, path).edges["TAGGED"].df
+    expect = delete_nodes(g, "Customer", cond).edges["TAGGED"].df
+    assert sorted(r["edge_id"] for r in got.collect()) == sorted(
+        r["edge_id"] for r in expect.collect()) == [3]
+
+
 def test_partitioned_set_props_scoped_rewrite(spark, graph, tmpdir):
     from pyspark.sql import functions as F
 
