@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 
 from rs_graphdb_spark import Query, load_tpch_graph
 from rs_graphdb_spark.functions import text as TX
-from rs_graphdb_spark.session import local_df as _ldf
+from rs_graphdb_spark.session import local_df as _ldf, read_parquet
 
 # Node-id namespace constants — must mirror rs_graphdb_spark.graph.LABEL_INDEX.
 S = 1 << 40
@@ -75,8 +75,7 @@ def _q(spark: SparkSession, sf_dir: str) -> Query:
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{table}.parquet")
 
 
 def _docs_fanned(spark: SparkSession, sf_dir: str,
@@ -2162,9 +2161,9 @@ def q100_stream_markers(spark, sf_dir):
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     d = pathlib.Path(__file__).parent / ".tmp" / f"events_src4_{tag}"
     if not d.exists():
-        (spark.read.parquet(f"{sf_dir}/events.parquet")
+        (_read(spark, sf_dir, "events")
          .repartition(4).write.mode("overwrite").parquet(str(d)))
-    total = spark.read.parquet(str(d)).count()
+    total = read_parquet(spark, str(d)).count()
     ckpt = pathlib.Path(__file__).parent / ".tmp" / f"mk_{uuid.uuid4().hex[:8]}"
     rec = StreamProgressRecorder().attach(spark)
     try:

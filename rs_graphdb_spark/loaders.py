@@ -13,6 +13,11 @@ lineitem measures as edge properties.
 
 All id assignment is arithmetic (``label_base + key``) — no
 monotonically_increasing_id, no window over a global order, zero shuffles.
+
+The load runs no Spark job: each table's schema comes from its parquet
+footer, read on the driver (``session.read_parquet``), and every frame
+below is a lazy plan over those relations. Nothing is cached or
+materialized here, so query work stays in the queries.
 """
 
 from __future__ import annotations
@@ -21,7 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.graph import EdgeSet, PropertyGraph, label_base
+from rs_graphdb_spark.session import read_parquet
 
+#: The fixture's tables, one ``<name>.parquet`` file each.
 TABLES = (
     "region",
     "nation",
@@ -36,11 +43,12 @@ TABLES = (
 )
 
 
+#: The tables the graph is built from: every fixture table but ``events``.
+GRAPH_TABLES = tuple(t for t in TABLES if t != "events")
+
+
 def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    # The fixture parquet uses TIMESTAMP(NANOS); this conf lets Spark read
-    # it (as TIMESTAMP_NTZ — naive, so no session-timezone skew vs DuckDB).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
+    return {t: read_parquet(spark, f"{sf_dir}/{t}.parquet") for t in GRAPH_TABLES}
 
 
 def _nid(label: str, key_col: str):

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the engine's parquet
+reader (``read_parquet``).
 
 Local-mode defaults match the driver harness (local[$SPARK_GRAFT_CPUS]);
 on a real cluster the same settings (AQE on, modest shuffle partitions
@@ -9,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_json_string
 
 
 def local_df(spark: SparkSession, data, schema: str):
@@ -48,6 +50,62 @@ def local_df(spark: SparkSession, data, schema: str):
     return spark.createDataFrame(pdf, schema=st)
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without Spark's schema-inference job.
+
+    Inference (``mergeSchemasInParallel``) schedules one job per read to
+    parse one footer of a few KB. Here the footer is read on the driver
+    with the session's Hadoop conf and converted by Spark's own code
+    (``ParquetFileFormat.readSchemaFromFooter`` with a converter built
+    from the session conf), so Spark row metadata, ``nanosAsLong``,
+    ``inferTimestampNTZ`` and binary-as-string come out as in inference.
+    A directory is read from its first data file in name order, as
+    inference assumes consistent part files. Anything else — a glob,
+    a missing path, partition subdirectories, summary files, no data
+    file — goes to ``spark.read.parquet`` itself, errors included.
+    """
+    # the fixture parquet may hold TIMESTAMP(NANOS), which Spark refuses
+    # to read without this; it must be set before the schema is converted
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    conf = jspark.sessionState().newHadoopConf()
+    status = _footer_file(jvm.org.apache.hadoop.fs.Path(path), conf)
+    if status is None:
+        return spark.read.parquet(path)
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
+        pq.ParquetToSparkSchemaConverter(jspark.sessionState().conf()),
+    )
+    return spark.read.schema(_parse_datatype_json_string(schema.json())).parquet(path)
+
+
+def _footer_file(p, conf):
+    """The file whose footer Spark's inference would read for ``p``, or
+    None where Spark must resolve ``p`` itself."""
+    fs = p.getFileSystem(conf)
+    if not fs.exists(p):
+        return None
+    status = fs.getFileStatus(p)
+    if status.isFile():
+        return status
+    data = []
+    for s in fs.listStatus(p):
+        name = s.getPath().getName()
+        if name in ("_metadata", "_common_metadata"):
+            return None
+        if name.startswith(("_", ".")) or name.endswith("._COPYING_"):
+            continue
+        if s.isDirectory():
+            return None
+        data.append((name, s))
+    return min(data, key=lambda d: d[0])[1] if data else None
+
+
 def get_spark(app_name: str = "rs-graphdb-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -59,7 +117,6 @@ def get_spark(app_name: str = "rs-graphdb-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # push medium-sized IN lists down to parquet as real value filters
         # instead of a min-max range (the default threshold of 10 turns
         # the standing-index probe's `bh IN (batch hashes)` into a

@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.session import read_parquet
 
 
 def save_graph(graph: PropertyGraph, path: str) -> None:
@@ -118,10 +119,10 @@ def load_graph(spark: SparkSession, path: str) -> PropertyGraph:
     meta = json.loads(spark.read.json(f"{path}/_meta").first()["meta"])
     g = PropertyGraph()
     for label in meta["nodes"]:
-        g.nodes[label] = spark.read.parquet(f"{path}/nodes/{label}")
+        g.nodes[label] = read_parquet(spark, f"{path}/nodes/{label}")
     for rt, info in meta["edges"].items():
         g.edges[rt] = EdgeSet(
-            df=spark.read.parquet(f"{path}/edges/{rt}"),
+            df=read_parquet(spark, f"{path}/edges/{rt}"),
             src_label=info["src_label"],
             dst_label=info["dst_label"],
         )

@@ -29,17 +29,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from rs_graphdb_spark.session import read_parquet
+
+
 def read_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """File-source stream over an events parquet directory.
 
     One file = one micro-batch by default; bound per-trigger intake with
     ``maxFilesPerTrigger`` at scale (the backpressure analog of the
-    reference's bounded mpsc channel). The stream schema is inferred from
-    a batch peek so the fixture's ts representation (TIMESTAMP(NANOS) read
-    as long under nanosAsLong, or TIMESTAMP(MICROS) read as ntz) never
-    drifts from what the files actually hold."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
+    reference's bounded mpsc channel). The stream schema is read from the
+    files' footer (``session.read_parquet``, no Spark job) so the fixture's
+    ts representation (TIMESTAMP(NANOS) read as long under nanosAsLong, or
+    TIMESTAMP(MICROS) read as ntz) never drifts from what the files hold."""
+    schema = read_parquet(spark, events_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -23,7 +23,7 @@ from rs_graphdb_spark.sources.export import (
 from rs_graphdb_spark.sources.json_api import json_query, substring_search
 
 SF = "/root/testdata/sf0.001"
-TMP = Path("/root/repo/.tmp")
+TMP = Path(__file__).resolve().parents[1] / ".tmp"
 
 
 @pytest.fixture(scope="module")

@@ -16,7 +16,7 @@ from rs_graphdb_spark.streaming.ops import (
 )
 
 SF = "/root/testdata/sf0.001"
-TMP = Path("/root/repo/.tmp")
+TMP = Path(__file__).resolve().parents[1] / ".tmp"
 
 
 @pytest.fixture()

@@ -20,11 +20,12 @@ from __future__ import annotations
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
