@@ -11,13 +11,19 @@ column namespace ``var__<prop>`` in one binding DataFrame, so
 - OPTIONAL MATCH compiles to a left outer join (fixes #4),
 - comparisons use native Spark semantics on all types (fixes #5).
 
-Catalyst sees one declarative plan per statement — filter pushdown, join
-reordering and broadcast selection all apply; only var-length expansion
-loops driver-side (same machinery as operators/traversal.py).
+Every pattern step is one ``operators.traversal.hop`` — the operator
+``Query`` steps through too, with its one edge-direction rule and one BFS
+(var-length binds per origin; only a deep or unbounded one loops
+driver-side). A target node's table joins only when the statement reads
+its properties, its pattern has props, or ``edge_integrity`` is false
+(``traversal.attach``), so a count over a hop chain plans one join per
+hop. Catalyst sees one declarative plan per statement — filter pushdown,
+join reordering and broadcast selection all apply.
 """
 
 from __future__ import annotations
 
+from dataclasses import fields, is_dataclass
 from dataclasses import replace as dc_replace
 
 from pyspark.sql import Column, DataFrame
@@ -26,7 +32,7 @@ from pyspark.sql import functions as F
 from rs_graphdb_spark.cypher import ast
 from rs_graphdb_spark.cypher.parser import parse_cypher
 from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
-from rs_graphdb_spark.operators import dml
+from rs_graphdb_spark.operators import dml, traversal
 from rs_graphdb_spark.session import local_df
 
 
@@ -38,17 +44,22 @@ def _pref(var: str, col: str) -> str:
     return f"{var}__{col}"
 
 
-def _match_cond(df: DataFrame, props) -> Column:
-    """AND of ``col == lit`` over pattern props. A key the table has never
-    seen matches nothing (reference partial-match scenario
-    `merge_comprehensive_test.rs:410-430`)."""
-    cond = F.lit(True)
-    for k, v in props:
-        cond = cond & ((F.col(k) == F.lit(v)) if k in df.columns else F.lit(False))
-    return cond
+def _prop_vars(node) -> set[str]:
+    """The variables whose properties the AST under ``node`` reads."""
+    if isinstance(node, ast.Prop):
+        return {node.var}
+    if is_dataclass(node):
+        node = [getattr(node, f.name) for f in fields(node)]
+    if isinstance(node, (tuple, list)):
+        return set().union(*map(_prop_vars, node))
+    return set()
 
 
 def _lits(updates) -> dict[str, Column]:
+    """SET items as literal columns. ``id`` is the node key that edges
+    point at, so a SET of it would orphan the node's edges."""
+    if any(k == "id" for k, _ in updates):
+        raise CypherCompileError("SET cannot change a node's id")
     return {k: F.lit(v) for k, v in updates}
 
 
@@ -56,118 +67,67 @@ class Compiler:
     def __init__(self, graph: PropertyGraph):
         self.g = graph
 
-    def _copy(self) -> PropertyGraph:
-        """A write's output graph: fresh catalogs over the same tables."""
-        return PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+    def _copy(self, clear_integrity: bool = False) -> PropertyGraph:
+        """A write's output graph: fresh catalogs over the same tables.
+        SET, DELETE and FOREACH mint no id and add no edge, so they keep
+        ``edge_integrity``; CREATE and MERGE clear it."""
+        return PropertyGraph(
+            nodes=dict(self.g.nodes), edges=dict(self.g.edges),
+            edge_integrity=self.g.edge_integrity and not clear_integrity)
 
     # -- pattern compilation --------------------------------------------
-    def _node_df(self, np: ast.NodePattern, label_hint: str | None) -> tuple[DataFrame, str]:
-        label = np.label or label_hint
+    def _compile_path(self, path: ast.PatternPath, used: set[str],
+                      labels: dict[str, str]) -> tuple[DataFrame, dict[str, str]]:
+        """One pattern path as a binding frame: the start node's rows, then
+        one ``traversal.hop`` per step. A target's node table joins only by
+        ``traversal.attach``'s rule (``used``: variables whose properties
+        the statement reads). ``labels`` (variable → label, bound so far)
+        lends its label to an unlabeled start."""
+        start = path.start
+        label = start.label or labels.get(start.var)
         if label is None:
             raise CypherCompileError(
-                f"cannot infer label for node variable {np.var!r}"
+                f"cannot infer label for node variable {start.var!r}"
             )
-        if label not in self.g.nodes:
-            # reference parity: MATCH on a label with no store yields an
-            # EMPTY result, not an error (`tests/with_clause_test.rs:
-            # 245-257` — a:NonExistent). Only the id column exists, so a
-            # property access still fails compile, like an unbound name.
-            spark = next(iter(self.g.nodes.values())).sparkSession
-            empty = spark.range(0).select(
-                F.col("id").alias(_pref(np.var, "id"))
-            )
-            return empty, label
-        df = self.g.nodes[label]
-        for k, v in np.props:
-            df = df.filter(F.col(k) == F.lit(v))
-        df = df.select([F.col(c).alias(_pref(np.var, c)) for c in df.columns])
-        return df, label
-
-    def _edge(self, rel: ast.RelPattern):
-        if rel.rel_type not in self.g.edges:
-            raise CypherCompileError(f"unknown relationship type {rel.rel_type!r}")
-        es = self.g.edges[rel.rel_type]
-        if rel.direction == "out":
-            return es.df.select("src", "dst"), es.dst_label
-        if rel.direction == "in":
-            return es.df.select(F.col("dst").alias("src"), F.col("src").alias("dst")), es.src_label
-        if es.src_label != es.dst_label:
-            raise CypherCompileError("undirected hop needs homogeneous edge type")
-        both = es.df.select("src", "dst").unionByName(
-            es.df.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        return both, es.dst_label
-
-    def _var_length_pairs(
-        self, edges: DataFrame, origins: DataFrame, min_h: int, max_h: int | None
-    ) -> DataFrame:
-        """(o, c) pairs with BFS-set distance per origin in [min_h, max_h] —
-        the multi-variable generalization of `expand`
-        (operators/traversal.py; reference `src/query.rs:171-218`)."""
-        edges = edges.localCheckpoint(eager=True)
-        start = origins.select(F.col("o")).dropDuplicates().withColumn("c", F.col("o"))
-        visited = start.localCheckpoint(eager=True)
-        current = visited
-        result = visited if min_h == 0 else None
-        depth = 0
-        while max_h is None or depth < max_h:
-            depth += 1
-            nxt = (
-                current.join(edges, current["c"] == edges["src"])
-                .select("o", F.col("dst").alias("c"))
-                .dropDuplicates()
-                .join(visited, ["o", "c"], "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            if depth >= min_h:
-                result = nxt if result is None else result.unionByName(nxt)
-            current = nxt
-        if result is None:
-            return start.limit(0)
-        return result
-
-    def _compile_path(self, path: ast.PatternPath) -> tuple[DataFrame, set[str]]:
-        df, label = self._node_df(path.start, None)
-        bound = {path.start.var}
-        prev = path.start
+        df = traversal.node_frame(self.g, label, _pref(start.var, ""), start.props)
+        bound = {start.var: label}
+        prev = start
         for rel, node in path.hops:
-            edges, dst_label = self._edge(rel)
-            ndf, label = self._node_df(node, dst_label)
-            if node.label and node.label != dst_label:
+            if rel.rel_type not in self.g.edges:
+                raise CypherCompileError(f"unknown relationship type {rel.rel_type!r}")
+            to = _pref(node.var, "id")
+            cycle = node.var in bound  # the far end must be that node
+            try:
+                df, label = traversal.hop(
+                    self.g, df, rel.rel_type, rel.direction,
+                    (rel.min_hops, rel.max_hops),
+                    _pref(prev.var, "id"), "__back" if cycle else to,
+                )
+            except ValueError as exc:
+                raise CypherCompileError(str(exc)) from None
+            if node.label and node.label != label:
                 raise CypherCompileError(
                     f"pattern label {node.label!r} does not match edge "
-                    f"endpoint {dst_label!r}"
+                    f"endpoint {label!r}"
                 )
-            src_col = F.col(_pref(prev.var, "id"))
-            if (rel.min_hops, rel.max_hops) == (1, 1):
-                hop = edges.select(
-                    F.col("src").alias("__hop_src"), F.col("dst").alias("__hop_dst")
-                )
-                df = (
-                    df.join(hop, src_col == F.col("__hop_src"))
-                    .join(ndf, F.col("__hop_dst") == F.col(_pref(node.var, "id")))
-                    .drop("__hop_src", "__hop_dst")
-                )
+            if cycle:
+                df = df.filter(F.col("__back") == F.col(to)).drop("__back")
+                if node.props:
+                    df = df.join(traversal.node_frame(self.g, label, _pref(node.var, ""),
+                                                      node.props).select(to), to, "left_semi")
             else:
-                origins = df.select(src_col.alias("o"))
-                pairs = self._var_length_pairs(
-                    edges, origins, rel.min_hops, rel.max_hops
-                )
-                df = (
-                    df.join(pairs, src_col == pairs["o"])
-                    .join(ndf, F.col("c") == F.col(_pref(node.var, "id")))
-                    .drop("o", "c")
-                )
-            bound.add(node.var)
+                df = traversal.attach(self.g, df, label, _pref(node.var, ""),
+                                      node.props, node.var in used)
+                bound[node.var] = label
             prev = node
         return df, bound
 
-    def _compile_matches(self, matches) -> DataFrame:
+    def _compile_matches(self, matches, used: set[str]
+                         ) -> tuple[DataFrame, dict[str, str]]:
+        """The MATCH/WITH pipeline as one binding frame, and the label of
+        every bound variable."""
         df: DataFrame | None = None
-        bound: set[str] = set()
+        bound: dict[str, str] = {}
         for m in matches:
             if isinstance(m, ast.WithClause):
                 if df is None:
@@ -175,7 +135,7 @@ class Compiler:
                 if m.where is not None:
                     df = df.filter(self._predicate(m.where, df))
                 if m.vars or m.props:  # project to the listed items
-                    missing = set(m.vars) - bound
+                    missing = set(m.vars) - bound.keys()
                     if missing:
                         raise CypherCompileError(f"WITH references unbound {missing}")
                     keep = [F.col(c) for c in df.columns
@@ -188,18 +148,21 @@ class Compiler:
                         keep.append(col.alias(alias) if alias
                                     else col.alias(_pref(p.var, p.key)))
                     df = df.select(*keep)
-                    bound = set(m.vars) | {p.var for p, a in m.props if a is None}
+                    kept = set(m.vars) | {p.var for p, a in m.props if a is None}
+                    bound = {v: lb for v, lb in bound.items() if v in kept}
                 continue
             for path in m.paths:
-                pdf, pvars = self._compile_path(path)
+                pdf, pvars = self._compile_path(path, used, bound)
                 if df is None:
                     df, bound = pdf, pvars
                     continue
-                shared = bound & pvars
-                join_cols = [
-                    c for c in pdf.columns
-                    if c.split("__")[0] in shared and c in df.columns
-                ]
+                # a shared variable joins on its id alone: its other
+                # columns are the same node's, and SQL equality on a NULL
+                # one would drop the row
+                join_cols = [_pref(v, "id") for v in sorted(bound.keys() & pvars.keys())
+                             if _pref(v, "id") in df.columns]
+                pdf = pdf.select([c for c in pdf.columns
+                                  if c in join_cols or c not in df.columns])
                 how = "left_outer" if m.optional else "inner"
                 if join_cols:
                     df = df.join(pdf, join_cols, how)
@@ -207,10 +170,10 @@ class Compiler:
                     df = df.crossJoin(pdf) if not m.optional else df.join(
                         pdf, F.lit(True), "left_outer"
                     )
-                bound |= pvars
+                bound = {**pvars, **bound}
         if df is None:
             raise CypherCompileError("query has no MATCH clause")
-        return df
+        return df, bound
 
     # -- expression compilation -----------------------------------------
     def _col(self, expr, df: DataFrame) -> Column:
@@ -338,7 +301,7 @@ class Compiler:
 
     # -- statements ------------------------------------------------------
     def run_read(self, q: ast.ReadQuery) -> DataFrame:
-        df = self._compile_matches(q.matches)
+        df, _ = self._compile_matches(q.matches, _prop_vars(q))
         if q.where is not None:
             df = df.filter(self._predicate(q.where, df))
         return self._project(q, df)
@@ -407,7 +370,7 @@ class Compiler:
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = self._copy()
+        g = self._copy(clear_integrity=True)
         if rel.rel_type in g.edges:
             es = g.edges[rel.rel_type]
         else:
@@ -442,7 +405,7 @@ class Compiler:
             # without the coalesce the CartesianProduct below schedules
             # left-partitions × right-partitions near-empty tasks — 4000+
             # tasks for a 1×1 pair on a 32-way table
-            return df.filter(_match_cond(df, np.props)).select("id").coalesce(1)
+            return df.filter(traversal.match_props(df, np.props)).select("id").coalesce(1)
 
         _ensure_nodes(src_pat, es.src_label)
         _ensure_nodes(dst_pat, es.dst_label)
@@ -515,7 +478,7 @@ class Compiler:
         if updates and var in node_vars:
             np = next(p for p in pats if p.var == var)
             nodes = g.nodes[np.label]
-            nodes = dml.set_props(nodes, _match_cond(nodes, np.props), _lits(updates))
+            nodes = dml.set_props(nodes, traversal.match_props(nodes, np.props), _lits(updates))
             g = PropertyGraph(
                 nodes={**g.nodes, np.label: nodes}, edges=dict(g.edges)
             )
@@ -523,38 +486,11 @@ class Compiler:
 
     def _path_exists(self, path: ast.PatternPath) -> bool:
         """Pre-mutation probe: does at least one binding of the FULL
-        pattern path exist? Chain of point-lookup joins — every frame is
-        a handful of ids, so this is a cheap driver action on the DML
-        path."""
-        g = self.g
-
-        def _ids(np: ast.NodePattern) -> DataFrame | None:
-            df = g.nodes.get(np.label)
-            return None if df is None else df.filter(_match_cond(df, np.props)).select("id")
-
-        cur = _ids(path.start)
-        if cur is None:
+        pattern path exist? A rel type the graph lacks matches nothing."""
+        if any(rel.rel_type not in self.g.edges for rel, _ in path.hops):
             return False
-        cur = cur.withColumnRenamed("id", "n0")
-        for i, (rel, dst) in enumerate(path.hops):
-            if rel.rel_type not in g.edges:
-                return False
-            e = g.edges[rel.rel_type].df.select("src", "dst")
-            if rel.direction == "in":
-                e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            nxt = _ids(dst)
-            if nxt is None:
-                return False
-            cur = (
-                cur.join(
-                    e.withColumnRenamed("src", f"n{i}")
-                    .withColumnRenamed("dst", f"n{i + 1}"),
-                    f"n{i}",
-                )
-                .join(nxt.withColumnRenamed("id", f"n{i + 1}"),
-                      f"n{i + 1}", "left_semi")
-            )
-        return not cur.isEmpty()
+        df, _ = self._compile_path(path, set(), {})
+        return not df.isEmpty()
 
     def _run_foreach(self, stmt: ast.ForeachStmt) -> PropertyGraph:
         """FOREACH over a literal node-id list + SET
@@ -655,7 +591,7 @@ class Compiler:
         """CREATE appends rows (`src/cypher/executor.rs:610-648`); id =
         max(id)+1 per created node — dense-enough without a single writer
         (SURVEY.md §7 hard-point #4)."""
-        g = self._copy()
+        g = self._copy(clear_integrity=True)
         for np in stmt.nodes:
             self._create_node(g, np)
         return g
@@ -672,7 +608,7 @@ class Compiler:
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = self._copy()
+        g = self._copy(clear_integrity=True)
         sid = self._create_node(g, src_pat)
         did = self._create_node(g, dst_pat)
         spark = next(iter(g.nodes.values())).sparkSession
@@ -700,19 +636,12 @@ class Compiler:
         return g
 
     def _match_victims(self, match: ast.MatchClause, where, var: str) -> tuple[DataFrame, str]:
-        df = self._compile_matches([match])
+        df, labels = self._compile_matches([match], _prop_vars((match, where)))
         if where is not None:
             df = df.filter(self._predicate(where, df))
-        label = None
-        for path in match.paths:
-            if path.start.var == var:
-                label = path.start.label
-            for _, node in path.hops:
-                if node.var == var:
-                    label = node.label
-        if label is None:
+        if var not in labels:
             raise CypherCompileError(f"variable {var!r} not bound by MATCH")
-        return df.select(F.col(_pref(var, "id")).alias("id")).dropDuplicates(), label
+        return df.select(F.col(_pref(var, "id")).alias("id")).dropDuplicates(), labels[var]
 
     def _run_delete(self, stmt: ast.DeleteStmt) -> PropertyGraph:
         """DELETE cascades to incident edges (`src/cypher/executor.rs:
@@ -736,7 +665,7 @@ class Compiler:
         ON MATCH SET (`src/cypher/executor.rs:740-1211`). A label the
         graph lacks matches nothing, so MERGE opens it, as CREATE does."""
         np = stmt.node
-        g = self._copy()
+        g = self._copy(clear_integrity=True)
         if np.label is None:
             # MERGE (n) — matches ANY node (reference
             # `tests/merge_comprehensive_test.rs:392-406`): a no-op on a
@@ -749,7 +678,7 @@ class Compiler:
                 "(label-table model has no label-less store)"
             )
         nodes = g.nodes.get(np.label)
-        cond = None if nodes is None else _match_cond(nodes, np.props)
+        cond = None if nodes is None else traversal.match_props(nodes, np.props)
         if nodes is None or nodes.filter(cond).isEmpty():
             self._create_node(g, dc_replace(np, props=(*np.props, *stmt.on_create)))
         elif stmt.on_match:

@@ -155,13 +155,6 @@ class EdgeSet:
     src_label: str
     dst_label: str
 
-    def reversed(self) -> "EdgeSet":
-        """Swap direction (for in_-hops / undirected traversal)."""
-        df = self.df.withColumnRenamed("src", "__tmp__").withColumnRenamed(
-            "dst", "src"
-        ).withColumnRenamed("__tmp__", "dst")
-        return EdgeSet(df=df, src_label=self.dst_label, dst_label=self.src_label)
-
 
 @dataclass
 class PropertyGraph:
@@ -177,17 +170,18 @@ class PropertyGraph:
     #: True when every edge endpoint is guaranteed to exist in its label's
     #: node table AND node ids are unique per label (the loader-built
     #: graphs: edge sets are derived from the same source tables as the
-    #: nodes, with FK integrity). Lets Query skip the hop's target-node
-    #: attribute join when only the hop multiplicity is consumed (a
-    #: count() after out() — the join is then a 1:1 attach that changes
-    #: nothing). Validated DML preserves the premises (merge_nodes
-    #: anti-joins against existing keys; delete cascades incident
-    #: edges) and keeps the flag; UNVALIDATED mutations — dml
-    #: create_nodes (id minted from a possibly-colliding natural key)
-    #: and the HTTP server's create nodes/rels (arbitrary client ids
-    #: and endpoints) — clear it (r10 ADVICE #1). Graphs assembled ad
-    #: hoc, and every Cypher write's output graph, default to False and
-    #: keep the full join.
+    #: nodes, with FK integrity). Lets a hop skip its target-node
+    #: attribute join when no target column is read
+    #: (``operators.traversal.attach``, for Cypher and ``Query`` alike —
+    #: the join is then a 1:1 attach that changes nothing). Writes that
+    #: mint no id and add no edge keep the flag: validated DML
+    #: (merge_nodes anti-joins against existing keys; delete cascades
+    #: incident edges), HTTP PUT/DELETE and Cypher SET, DELETE and
+    #: FOREACH (none may SET ``id``). Writes that mint ids or add edges
+    #: clear it: dml create_nodes (id minted from a possibly-colliding
+    #: natural key), the HTTP server's create nodes/rels (arbitrary client
+    #: ids and endpoints) and Cypher CREATE and MERGE. Graphs assembled
+    #: ad hoc default to False and keep the full join.
     edge_integrity: bool = False
 
     # -- scans ------------------------------------------------------------

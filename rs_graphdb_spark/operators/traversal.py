@@ -1,4 +1,10 @@
-"""Variable-length traversal as driver-side iterative DataFrame loops.
+"""Hops and variable-length traversal as DataFrame joins and driver loops.
+
+One hop operator serves `Query` and the Cypher compiler, as the
+reference's one adjacency step serves its executor and its `Query` API
+(`src/storage/mem_store.rs:30-31`): :func:`edges_for` is the one
+edge-direction rule, :func:`hop` the one step (or per-row BFS), and
+:func:`attach` the one target-join rule.
 
 Reference: `Query::out_variable_length` (`/root/reference/src/query.rs:171-218`),
 `in_variable_length` (`:228-275`), `undirected_variable_length` (`:285-354`) —
@@ -8,16 +14,18 @@ BFS expansion with a visited set, collecting nodes whose BFS depth falls in
 Semantics here: **BFS distance from the start SET** (min over start nodes) —
 the reference shares one visited set across start nodes, so its results are
 iteration-order dependent (SURVEY.md §3.4 quirk #6); set-distance is the
-order-independent formalization.
+order-independent formalization. A ``key`` (Cypher binds every origin)
+makes it the distance from each key value's own start set.
 
 Scale notes: each level is one self-join + anti-join; `localCheckpoint`
 every ``CHECKPOINT_EVERY`` levels cuts lineage growth; the frontier is
-deduped per level so the working set is bounded by |V|, not by path count.
+deduped per level so the working set is bounded by |V| (per key), not by
+path count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.algorithms.pregel import CHECKPOINT_EVERY
@@ -29,21 +37,86 @@ from rs_graphdb_spark.graph import PropertyGraph
 _LAZY_MAX_HOPS = 3
 
 
-def _edges_for(graph: PropertyGraph, rel_type: str, direction: str):
+def edges_for(graph: PropertyGraph, rel_type: str, direction: str, cols=()):
+    """``rel_type``'s edges as a (src, dst, *cols) frame oriented for
+    ``direction`` (out, in or both), and the label at the dst end.
+    ``cols`` are edge column names or expressions over the edge table."""
     es = graph.edges[rel_type]
+    fwd = es.df.select("src", "dst", *cols)
+    rev = es.df.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols)
     if direction == "out":
-        return es.df.select("src", "dst"), es.dst_label
+        return fwd, es.dst_label
     if direction == "in":
-        r = es.reversed()
-        return r.df.select("src", "dst"), r.dst_label
+        return rev, es.src_label
     if direction == "both":
         if es.src_label != es.dst_label:
-            raise ValueError("undirected traversal needs a homogeneous edge set")
-        fwd = es.df.select("src", "dst")
-        return fwd.unionByName(
-            es.df.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ), es.dst_label
+            raise ValueError("undirected hop needs homogeneous edge type")
+        return fwd.unionByName(rev), es.dst_label
     raise ValueError(f"direction must be out/in/both, got {direction!r}")
+
+
+def match_props(df: DataFrame, props) -> Column:
+    """AND of ``col == lit`` over pattern props (key, value). A key the
+    table has never seen matches nothing (reference partial-match
+    scenario `merge_comprehensive_test.rs:410-430`)."""
+    cond = F.lit(True)
+    for k, v in props:
+        cond = cond & ((F.col(k) == F.lit(v)) if k in df.columns else F.lit(False))
+    return cond
+
+
+def node_frame(graph: PropertyGraph, label: str, prefix: str = "",
+               props=()) -> DataFrame:
+    """``label``'s node rows matching ``props`` (:func:`match_props`),
+    columns renamed ``prefix + name``. A label the graph lacks has no
+    rows, only an id column (reference parity: MATCH on a label with no
+    store is empty, `tests/with_clause_test.rs:245-257`)."""
+    if label not in graph.nodes:
+        spark = next(iter(graph.nodes.values())).sparkSession
+        return spark.range(0).select(F.col("id").alias(prefix + "id"))
+    df = graph.nodes[label]
+    if props:
+        df = df.filter(match_props(df, props))
+    return df.select([F.col(c).alias(prefix + c) for c in df.columns])
+
+
+def attach(graph: PropertyGraph, frame: DataFrame, label: str,
+           prefix: str = "", props=(), needed: bool = False) -> DataFrame:
+    """The target-join rule: inner-join ``label``'s node table
+    (:func:`node_frame`) to ``frame`` on ``prefix + "id"`` when the caller
+    reads its columns (``needed``), ``props`` filter it, or
+    ``graph.edge_integrity`` is false — the join then drops dangling
+    endpoints and repeats duplicate ids. Under integrity every endpoint
+    exists once, so the id-only frame is already exact."""
+    if not (needed or props or not graph.edge_integrity):
+        return frame
+    return frame.join(node_frame(graph, label, prefix, props), prefix + "id")
+
+
+def hop(graph: PropertyGraph, frame: DataFrame, rel_type: str,
+        direction: str = "out", hops=(1, 1), src: str = "id",
+        dst: str = "id", edge_cols=()) -> tuple[DataFrame, str]:
+    """One pattern step: every row of ``frame`` joined, at its node id in
+    column ``src``, to the ``rel_type`` edges in ``direction``. The far
+    end lands in column ``dst`` (replacing it when ``dst`` is already a
+    column), ``edge_cols`` ride along. ``hops=(lo, hi)`` other than (1, 1)
+    binds every node at BFS distance lo..hi (``hi=None``: to fixpoint) from
+    the row's own ``src`` id. Returns (frame, far-end label); the far-end
+    node table is not joined — see :func:`attach`."""
+    edges, label = edges_for(graph, rel_type, direction, edge_cols)
+    keep = [c for c in frame.columns if c != dst]
+    if hops == (1, 1):
+        e = edges.select(F.col("src").alias("__src"),
+                         F.col("dst").alias("__dst"), *edge_cols)
+        return (frame.join(e, F.col(src) == F.col("__src"))
+                .select(F.col("__dst").alias(dst), *edge_cols, *keep)), label
+    starts = frame.select(F.col(src).alias("__src"), F.col(src).alias("id"))
+    pairs, reached = expand(graph, starts, rel_type, *hops, direction,
+                            key=("__src",))
+    if reached is None:  # zero hops over a heterogeneous set: drop origins
+        pairs = pairs.join(node_frame(graph, label), "id", "left_semi")
+    return (frame.join(pairs, F.col(src) == F.col("__src"))
+            .select(F.col("id").alias(dst), *keep)), label
 
 
 def expand(
@@ -53,17 +126,21 @@ def expand(
     min_hops: int,
     max_hops: int | None,
     direction: str = "out",
+    key: tuple[str, ...] = (),
 ) -> tuple[DataFrame, str | None]:
     """Nodes at BFS distance in [min_hops, max_hops] from the start set.
 
-    ``frontier_ids``: single-column ``id`` DataFrame. ``max_hops=None``
-    means expand to fixpoint (reference `*n..` forms). Returns
-    (ids DataFrame, reached label) — label is None only for min_hops == 0
-    on a heterogeneous chain where start/target labels differ.
+    ``frontier_ids``: an ``id`` column plus the ``key`` columns; with a
+    key, distance is from each key value's own start set and the result
+    keeps the key. ``max_hops=None`` means expand to fixpoint (reference
+    `*n..` forms). Returns (``key`` + ``id`` DataFrame, reached label) —
+    label is None only for min_hops == 0 on a heterogeneous chain where
+    start/target labels differ.
     """
-    edges, dst_label = _edges_for(graph, rel_type, direction)
+    edges, dst_label = edges_for(graph, rel_type, direction)
     es = graph.edges[rel_type]
     homogeneous = es.src_label == es.dst_label
+    ids = [*key, "id"]
 
     # Shallow bounded expansions (*1..2 and friends): build ONE lazy plan
     # instead of the eager per-level loop. The loop costs ~4 driver-
@@ -75,16 +152,16 @@ def expand(
     # The edge frame is referenced max_hops times (≤3 scans of the source
     # parquet) instead of being materialized once — cheaper on both ends.
     if max_hops is not None and max_hops <= _LAZY_MAX_HOPS:
-        start = frontier_ids.select("id").dropDuplicates(["id"])
+        start = frontier_ids.select(*ids).dropDuplicates(ids)
         visited = start
         current = start
         result = start if min_hops == 0 else None
         for depth in range(1, max_hops + 1):
             nxt = (
                 current.join(edges, current["id"] == edges["src"])
-                .select(F.col("dst").alias("id"))
-                .dropDuplicates(["id"])
-                .join(visited, "id", "left_anti")
+                .select(*key, F.col("dst").alias("id"))
+                .dropDuplicates(ids)
+                .join(visited, ids, "left_anti")
             )
             visited = visited.unionByName(nxt)
             if depth >= min_hops:
@@ -95,15 +172,15 @@ def expand(
         if result is None:
             result = start.limit(0)
         out_label = dst_label if (min_hops > 0 or homogeneous) else None
-        return result.dropDuplicates(["id"]), out_label
+        return result.dropDuplicates(ids), out_label
 
     # Deeper or unbounded: the eager BFS loop, whose per-level checkpoints
     # bound lineage and whose emptiness test terminates the fixpoint.
     # Heterogeneous single-rel chains exhaust after one hop.
     dists = bfs_distances(graph, frontier_ids, rel_type, direction,
-                          max_hops if homogeneous else 1)
+                          max_hops if homogeneous else 1, key=key)
     out_label = dst_label if (min_hops > 0 or homogeneous) else None
-    return dists.filter(F.col("dist") >= min_hops).select("id"), out_label
+    return dists.filter(F.col("dist") >= min_hops).select(*ids), out_label
 
 
 def bfs_distances(
@@ -113,27 +190,30 @@ def bfs_distances(
     direction: str = "out",
     max_depth: int | None = None,
     stop_at: DataFrame | None = None,
+    key: tuple[str, ...] = (),
 ) -> DataFrame:
-    """BFS layering: (id, dist) for every reachable node.
+    """BFS layering: (*key, id, dist) for every reachable node — per key
+    value when ``key`` names columns of ``start_ids`` (see `expand`).
 
     Reference `bfs_shortest_path` (`src/algorithms/shortest_path.rs:326-403`)
     generalized to all-targets; ``stop_at`` enables early exit once any
     target id is reached (has_path / point-to-point shortest path).
     """
-    edges, _ = _edges_for(graph, rel_type, direction)
+    edges, _ = edges_for(graph, rel_type, direction)
     edges = edges.localCheckpoint(eager=True)
-    visited = start_ids.select("id").dropDuplicates(["id"]).withColumn(
+    ids = [*key, "id"]
+    visited = start_ids.select(*ids).dropDuplicates(ids).withColumn(
         "dist", F.lit(0)
     ).localCheckpoint(eager=True)
-    current = visited.select("id")
+    current = visited.select(*ids)
     depth = 0
     while max_depth is None or depth < max_depth:
         depth += 1
         nxt = (
             current.join(edges, current["id"] == edges["src"])
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
-            .join(visited.select("id"), "id", "left_anti")
+            .select(*key, F.col("dst").alias("id"))
+            .dropDuplicates(ids)
+            .join(visited.select(*ids), ids, "left_anti")
             .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
@@ -156,13 +236,8 @@ def has_path(
     max_depth: int | None = 64,
 ) -> bool:
     """Reachability (`src/algorithms/shortest_path.rs:314-323`)."""
-    spark = graph.edges[rel_type].df.sparkSession
-    # JVM-side one-row literals: a pickled-list relation would re-run a
-    # Python worker task on every action over the plan (session.local_df)
-    start = spark.range(1).select(F.lit(int(src_id)).cast("long").alias("id"))
-    target = spark.range(1).select(F.lit(int(dst_id)).cast("long").alias("id"))
-    reached = bfs_distances(graph, start, rel_type, direction, max_depth, target)
-    return not reached.join(target, "id").isEmpty()
+    return shortest_path_length(graph, src_id, dst_id, rel_type, direction,
+                                max_depth) is not None
 
 
 def shortest_path_length(
@@ -203,7 +278,7 @@ def shortest_path_counts(
     predecessor at that predecessor's own BFS depth, so per-level summation
     is exact.
     """
-    edges, _ = _edges_for(graph, rel_type, direction)
+    edges, _ = edges_for(graph, rel_type, direction)
     edges = edges.localCheckpoint(eager=True)
     spark = edges.sparkSession
     current = spark.range(1).select(
@@ -245,7 +320,7 @@ def all_simple_paths_counts(
     exponential — max_depth is the same safety cap as the reference's
     max_depth argument (SURVEY.md §7 "what's hard" #2).
     """
-    edges, _ = _edges_for(graph, rel_type, direction)
+    edges, _ = edges_for(graph, rel_type, direction)
     edges = edges.localCheckpoint(eager=True)
     spark = edges.sparkSession
     paths = spark.range(1).select(
@@ -292,14 +367,7 @@ def weighted_shortest_paths(
     ``weight``: Column expression over the edge DataFrame (must be
     non-negative for the fixpoint argument to hold).
     """
-    es = graph.edges[rel_type]
-    edges = es.df.select("src", "dst", weight.alias("w"))
-    if direction == "in":
-        edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    elif direction == "both":
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
+    edges, _ = edges_for(graph, rel_type, direction, (weight.alias("w"),))
     edges = edges.localCheckpoint(eager=True)
     spark = edges.sparkSession
     dists = spark.range(1).select(

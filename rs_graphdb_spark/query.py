@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.graph import PropertyGraph
+from rs_graphdb_spark.operators.traversal import attach, expand, hop
 
 
 @dataclass(frozen=True)
@@ -36,15 +37,16 @@ class Query:
     graph: PropertyGraph
     frontier: DataFrame | None = None
     label: str | None = None
-    #: Narrow twin of ``frontier`` after a hop: the hop output BEFORE the
-    #: target-node attribute join (columns: id + edge_cols + carry). Only
-    #: set when ``graph.edge_integrity`` holds — the skipped join is then
-    #: a 1:1 attribute attach (unique ids, no dangling endpoints), so any
-    #: consumer that needs none of the target's node columns (count after
-    #:  a hop chain, aggregates over edge/carry columns, the next hop's
-    #: src ids) can read this frame instead and drop the node-table scan
-    #: + broadcast from the plan entirely. Reset to None by every step
-    #: whose result depends on columns this frame may not carry.
+    #: Narrow twin of ``frontier`` after a hop: the hop output with the
+    #: target node table joined only by the one target-join rule
+    #: (``operators.traversal.attach``). Under ``graph.edge_integrity``
+    #: (unique ids, no dangling endpoints) it is id + edge_cols + carry,
+    #: and any consumer that needs none of the target's node columns
+    #: (count after a hop chain, aggregates over edge/carry columns, the
+    #: next hop's src ids) reads it and drops the node-table scan + join
+    #: from the plan; otherwise it is the joined frame. Reset to None by
+    #: every step whose result depends on columns this frame may not
+    #: carry.
     hop_frontier: DataFrame | None = None
 
     # -- sources ---------------------------------------------------------
@@ -95,15 +97,8 @@ class Query:
         return self.where(F.col(key).isNotNull())
 
     # -- hops (the reference's only join, §2.3) --------------------------
-    def _hop(self, rel_type: str, reverse: bool, dedup: bool,
+    def _hop(self, rel_type: str, direction: str, dedup: bool,
              edge_cols: tuple[str, ...], carry: tuple[str, ...]) -> "Query":
-        es = self.graph.edges[rel_type]
-        if reverse:
-            es = es.reversed()
-        edge = es.df.select(
-            F.col("src"), F.col("dst").alias("__dst"),
-            *[F.col(c) for c in edge_cols],
-        )
         # A chained hop needs only (id, carry) from the previous step —
         # when the narrow hop_frontier carries those, start from it and
         # the intermediate node table never enters the plan.
@@ -112,19 +107,16 @@ class Query:
             c in self.hop_frontier.columns for c in carry
         ):
             src_frame = self.hop_frontier
-        hopped = (
-            src_frame.select(F.col("id").alias("src"),
-                             *[F.col(c) for c in carry])
-            .join(edge, "src")
-            .select(F.col("__dst").alias("id"), *edge_cols, *carry)
-        )
+        hopped, label = hop(self.graph, src_frame.select("id", *carry),
+                            rel_type, direction, edge_cols=edge_cols)
         if dedup:
             hopped = hopped.dropDuplicates(["id"])
-        target = self.graph.nodes[es.dst_label]
-        out = hopped.join(target, "id")
-        return replace(self, frontier=out, label=es.dst_label,
-                       hop_frontier=hopped
-                       if self.graph.edge_integrity else None)
+        return self._landed(hopped, label)
+
+    def _landed(self, ids: DataFrame, label: str) -> "Query":
+        """The frontier after a hop or expansion landing on ``label``."""
+        return replace(self, frontier=attach(self.graph, ids, label, needed=True),
+                       label=label, hop_frontier=attach(self.graph, ids, label))
 
     def out(self, rel_type: str, dedup: bool = False,
             edge_cols: tuple[str, ...] = (),
@@ -133,15 +125,13 @@ class Query:
         multiplicity like the reference; ``edge_cols`` carries edge
         properties onto the frontier, ``carry`` keeps source-node columns
         (multi-variable bindings — fixes SURVEY.md §3.4 quirk #1)."""
-        return self._hop(rel_type, reverse=False, dedup=dedup,
-                         edge_cols=edge_cols, carry=carry)
+        return self._hop(rel_type, "out", dedup, edge_cols, carry)
 
     def in_(self, rel_type: str, dedup: bool = False,
             edge_cols: tuple[str, ...] = (),
             carry: tuple[str, ...] = ()) -> "Query":
         """One hop along incoming edges (`src/query.rs:144-155`)."""
-        return self._hop(rel_type, reverse=True, dedup=dedup,
-                         edge_cols=edge_cols, carry=carry)
+        return self._hop(rel_type, "in", dedup, edge_cols, carry)
 
     def semi_out(self, rel_type: str) -> "Query":
         """Keep frontier nodes having ≥1 outgoing edge of the type — the
@@ -191,8 +181,6 @@ class Query:
 
     def _variable_length(self, rel_type: str, min_hops: int,
                          max_hops: int | None, direction: str) -> "Query":
-        from rs_graphdb_spark.operators.traversal import expand
-
         ids, dst_label = expand(
             self.graph, self.frontier.select("id"), rel_type,
             min_hops=min_hops, max_hops=max_hops, direction=direction,
@@ -200,10 +188,7 @@ class Query:
         if dst_label is None:
             return replace(self, frontier=ids, label=None,
                            hop_frontier=None)
-        return replace(self,
-                       frontier=ids.join(self.graph.nodes[dst_label], "id"),
-                       label=dst_label, hop_frontier=ids
-                       if self.graph.edge_integrity else None)
+        return self._landed(ids, dst_label)
 
     def in_variable_length(self, rel_type: str, min_hops: int,
                            max_hops: int | None) -> "Query":

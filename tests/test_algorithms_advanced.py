@@ -393,9 +393,9 @@ def _old_label_propagation(nodes, edges, iterations):
 
 
 def _old_expand(graph, frontier_ids, rel_type, min_hops, max_hops, direction):
-    from rs_graphdb_spark.operators.traversal import _edges_for
+    from rs_graphdb_spark.operators.traversal import edges_for
 
-    edges, dst_label = _edges_for(graph, rel_type, direction)
+    edges, dst_label = edges_for(graph, rel_type, direction)
     es = graph.edges[rel_type]
     homogeneous = es.src_label == es.dst_label
     edges = edges.localCheckpoint(eager=True)

@@ -171,7 +171,7 @@ def _path_bindings(path, tables, edges):
             hi = rel.max_hops if rel.max_hops is not None else 10 ** 9
             for b in binds:
                 o = b[prev.var]["id"]
-                # BFS set-distance (mirror of compiler._var_length_pairs:
+                # BFS set-distance per origin (mirror of traversal.hop:
                 # a node appears once, at its shortest distance)
                 dist = {o: 0}
                 frontier, depth = [o], 0
@@ -195,20 +195,16 @@ def _path_bindings(path, tables, edges):
 
 
 def _join_bindings(left, right, optional):
-    """Compiler joins on every shared variable's columns — SQL equality,
-    so a NULL column never matches; OPTIONAL keeps unmatched left rows
-    with the right side's new vars absent (→ NULL projections)."""
+    """Compiler joins shared variables on their node id — the same node,
+    whatever its other (possibly NULL) columns hold; OPTIONAL keeps
+    unmatched left rows with the right side's new vars absent (→ NULL
+    projections)."""
     if not left:
         return []
     shared = set(left[0]) & (set(right[0]) if right else set())
 
     def match(lb, rb):
-        for v in shared:
-            lr, rr = lb[v], rb[v]
-            for k in lr:
-                if lr[k] is None or rr.get(k) is None or lr[k] != rr[k]:
-                    return False
-        return True
+        return all(lb[v]["id"] == rb[v]["id"] for v in shared)
 
     out = []
     for lb in left:
