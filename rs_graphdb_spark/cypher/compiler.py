@@ -67,14 +67,6 @@ class Compiler:
     def __init__(self, graph: PropertyGraph):
         self.g = graph
 
-    def _copy(self, clear_integrity: bool = False) -> PropertyGraph:
-        """A write's output graph: fresh catalogs over the same tables.
-        SET, DELETE and FOREACH mint no id and add no edge, so they keep
-        ``edge_integrity``; CREATE and MERGE clear it."""
-        return PropertyGraph(
-            nodes=dict(self.g.nodes), edges=dict(self.g.edges),
-            edge_integrity=self.g.edge_integrity and not clear_integrity)
-
     # -- pattern compilation --------------------------------------------
     def _compile_path(self, path: ast.PatternPath, used: set[str],
                       labels: dict[str, str]) -> tuple[DataFrame, dict[str, str]]:
@@ -116,8 +108,9 @@ class Compiler:
                     df = df.join(traversal.node_frame(self.g, label, _pref(node.var, ""),
                                                       node.props).select(to), to, "left_semi")
             else:
-                df = traversal.attach(self.g, df, label, _pref(node.var, ""),
-                                      node.props, node.var in used)
+                df = traversal.attach(self.g, df, rel.rel_type, label,
+                                      _pref(node.var, ""), node.props,
+                                      node.var in used)
                 bound[node.var] = label
             prev = node
         return df, bound
@@ -370,7 +363,7 @@ class Compiler:
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = self._copy(clear_integrity=True)
+        g = self.g
         if rel.rel_type in g.edges:
             es = g.edges[rel.rel_type]
         else:
@@ -384,7 +377,8 @@ class Compiler:
             es = EdgeSet(df=empty, src_label=src_pat.label,
                          dst_label=dst_pat.label)
 
-        def _ensure_nodes(np: ast.NodePattern, label: str) -> None:
+        def _ensure_nodes(g: PropertyGraph, np: ast.NodePattern,
+                          label: str) -> PropertyGraph:
             """Create the endpoint from its pattern when nothing matches
             (MERGE creates the missing parts of the pattern)."""
             if np.label and np.label != label:
@@ -394,10 +388,9 @@ class Compiler:
             if label not in g.nodes:
                 raise CypherCompileError(f"unknown label {label!r}")
             if not np.props:
-                return
+                return g
             pat = ast.NodePattern(var=np.var, label=label, props=np.props)
-            merged = Compiler(g)._run_merge(ast.MergeStmt(node=pat))
-            g.nodes[label] = merged.nodes[label]
+            return Compiler(g)._run_merge(ast.MergeStmt(node=pat))
 
         def _ids(np: ast.NodePattern, label: str) -> DataFrame:
             df = g.nodes[label]
@@ -407,38 +400,24 @@ class Compiler:
             # tasks for a 1×1 pair on a 32-way table
             return df.filter(traversal.match_props(df, np.props)).select("id").coalesce(1)
 
-        _ensure_nodes(src_pat, es.src_label)
-        _ensure_nodes(dst_pat, es.dst_label)
+        g = _ensure_nodes(g, src_pat, es.src_label)
+        g = _ensure_nodes(g, dst_pat, es.dst_label)
         a = _ids(src_pat, es.src_label).withColumnRenamed("id", "src")
         b = _ids(dst_pat, es.dst_label).withColumnRenamed("id", "dst")
         pairs = a.crossJoin(b)
-        # materialized before it is appended to the edge table it was
-        # derived from (lineage rule, operators/dml.py)
-        missing = pairs.join(
-            es.df.select("src", "dst"), ["src", "dst"], "left_anti"
-        ).localCheckpoint(eager=True)
-        edge_df = es.df
-        if stmt.on_match:
-            matched = pairs.join(es.df.select("src", "dst"), ["src", "dst"],
-                                 "left_semi")
-            edge_df = dml.set_props_on(edge_df, matched, _lits(stmt.on_match))
+        missing = pairs.join(es.df.select("src", "dst"), ["src", "dst"], "left_anti")
+        if stmt.on_match and rel.rel_type in g.edges:
+            matched = es.df.join(pairs, ["src", "dst"], "left_semi").select("edge_id")
+            g, _ = dml.update(g, rel.rel_type, matched, _lits(stmt.on_match), rel=True)
         if missing.isEmpty():
-            if edge_df is not es.df:
-                g.edges[rel.rel_type] = EdgeSet(
-                    df=edge_df, src_label=es.src_label, dst_label=es.dst_label
-                )
             return g
-        first_eid = dml.next_id(edge_df, "edge_id")
+        first_eid = dml.next_id(es.df, "edge_id")
         w = Window.orderBy("src", "dst")
         new = missing.withColumn("edge_id", F.lit(first_eid - 1) + F.row_number().over(w))
         if stmt.on_create:
             new = new.withColumns(_lits(stmt.on_create))
-        g.edges[rel.rel_type] = EdgeSet(
-            df=dml.append_rows(edge_df, new),
-            src_label=es.src_label,
-            dst_label=es.dst_label,
-        )
-        return g
+        return dml.insert(g, rel.rel_type, new, rel=True,
+                          ends=(es.src_label, es.dst_label))
 
     def _run_merge_path(self, stmt: ast.MergeRelStmt) -> PropertyGraph:
         """Chained relationship MERGE
@@ -477,11 +456,8 @@ class Compiler:
         )
         if updates and var in node_vars:
             np = next(p for p in pats if p.var == var)
-            nodes = g.nodes[np.label]
-            nodes = dml.set_props(nodes, traversal.match_props(nodes, np.props), _lits(updates))
-            g = PropertyGraph(
-                nodes={**g.nodes, np.label: nodes}, edges=dict(g.edges)
-            )
+            cond = traversal.match_props(g.nodes[np.label], np.props)
+            g, _ = dml.update(g, np.label, cond, _lits(updates))
         return g
 
     def _path_exists(self, path: ast.PatternPath) -> bool:
@@ -500,7 +476,7 @@ class Compiler:
         from rs_graphdb_spark.graph import ID_STRIDE, label_of
 
         if not stmt.ids:  # FOREACH over [] is a no-op (foreach_test.rs:58)
-            return self._copy()
+            return self.g
         if len({i // ID_STRIDE for i in stmt.ids}) != 1:
             raise CypherCompileError("FOREACH ids must share one label namespace")
         label = label_of(self.g.nodes, stmt.ids[0])
@@ -512,10 +488,7 @@ class Compiler:
                 label = next(iter(self.g.nodes))
             else:
                 raise CypherCompileError("FOREACH ids resolve to no known label")
-        g = self._copy()
-        g.nodes[label] = dml.set_props(
-            g.nodes[label], F.col("id").isin(list(stmt.ids)), _lits(stmt.updates)
-        )
+        g, _ = dml.update(self.g, label, list(stmt.ids), _lits(stmt.updates))
         return g
 
     def _run_call(self, stmt: ast.CallStmt) -> DataFrame:
@@ -556,11 +529,12 @@ class Compiler:
             out = out.limit(stmt.limit)
         return out
 
-    # -- DML (graph-rewrite semantics; returns the NEW node DataFrame) ---
-    def _create_node(self, g: PropertyGraph, np: ast.NodePattern) -> int:
-        """Append one node row from a pattern, id = the label's next dense
+    # -- DML (graph-rewrite semantics; returns the NEW graph) ------------
+    def _create_node(self, g: PropertyGraph, np: ast.NodePattern
+                     ) -> tuple[PropertyGraph, int]:
+        """Insert one node row from a pattern, id = the label's next dense
         id; opens a new label table for a previously-unseen label. Returns
-        the new id (mutates g's node dict)."""
+        the new graph and the new id."""
         if np.label is None:
             raise CypherCompileError("CREATE needs a label")
         if not g.nodes:
@@ -568,7 +542,6 @@ class Compiler:
                 "CREATE on an empty graph needs a SparkSession-bearing "
                 "table — load at least one label first"
             )
-        nodes = g.nodes.get(np.label)
         nid = dml.next_node_id(g, np.label)
         row = dict(np.props)
         spark = next(iter(g.nodes.values())).sparkSession
@@ -580,20 +553,17 @@ class Compiler:
             new = spark.createDataFrame(pd.DataFrame([row]))
         else:
             new = spark.range(1).select()
-        new = new.withColumn("id", F.lit(nid).cast("long"))
-        if nodes is None:
-            g.nodes[np.label] = new.select("id", *[c for c in new.columns if c != "id"])
-        else:
-            g.nodes[np.label] = dml.append_rows(nodes, new)
-        return nid
+        new = new.select(F.lit(nid).cast("long").alias("id"),
+                         *[c for c in new.columns if c != "id"])
+        return dml.insert(g, np.label, new), nid
 
     def _run_create(self, stmt: ast.CreateStmt) -> PropertyGraph:
         """CREATE appends rows (`src/cypher/executor.rs:610-648`); id =
         max(id)+1 per created node — dense-enough without a single writer
         (SURVEY.md §7 hard-point #4)."""
-        g = self._copy(clear_integrity=True)
+        g = self.g
         for np in stmt.nodes:
-            self._create_node(g, np)
+            g, _ = self._create_node(g, np)
         return g
 
     def _run_create_rel(self, stmt: ast.CreateRelStmt) -> PropertyGraph:
@@ -608,32 +578,25 @@ class Compiler:
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = self._copy(clear_integrity=True)
-        sid = self._create_node(g, src_pat)
-        did = self._create_node(g, dst_pat)
+        g, sid = self._create_node(self.g, src_pat)
+        g, did = self._create_node(g, dst_pat)
         spark = next(iter(g.nodes.values())).sparkSession
-        if rel.rel_type in g.edges:
-            es = g.edges[rel.rel_type]
+        es = g.edges.get(rel.rel_type)
+        if es is not None:
             try:
                 dml.check_namespace(es.src_label, [sid], f"{rel.rel_type} src")
                 dml.check_namespace(es.dst_label, [did], f"{rel.rel_type} dst")
             except ValueError as exc:
                 raise CypherCompileError(str(exc)) from None
-            new = local_df(spark, [(dml.next_id(es.df, "edge_id"), sid, did)],
-                           "edge_id long, src long, dst long")
-            g.edges[rel.rel_type] = dc_replace(es, df=dml.append_rows(es.df, new))
-        else:
-            if not (src_pat.label and dst_pat.label):
-                raise CypherCompileError(
-                    f"new relationship type {rel.rel_type!r} needs labeled "
-                    "endpoint patterns"
-                )
-            g.edges[rel.rel_type] = EdgeSet(
-                df=local_df(spark, [(1, sid, did)],
-                            "edge_id long, src long, dst long"),
-                src_label=src_pat.label, dst_label=dst_pat.label,
+        elif not (src_pat.label and dst_pat.label):
+            raise CypherCompileError(
+                f"new relationship type {rel.rel_type!r} needs labeled "
+                "endpoint patterns"
             )
-        return g
+        eid = 1 if es is None else dml.next_id(es.df, "edge_id")
+        new = local_df(spark, [(eid, sid, did)], "edge_id long, src long, dst long")
+        return dml.insert(g, rel.rel_type, new, rel=True,
+                          ends=(src_pat.label, dst_pat.label))
 
     def _match_victims(self, match: ast.MatchClause, where, var: str) -> tuple[DataFrame, str]:
         df, labels = self._compile_matches([match], _prop_vars((match, where)))
@@ -641,13 +604,13 @@ class Compiler:
             df = df.filter(self._predicate(where, df))
         if var not in labels:
             raise CypherCompileError(f"variable {var!r} not bound by MATCH")
-        return df.select(F.col(_pref(var, "id")).alias("id")).dropDuplicates(), labels[var]
+        return df.select(F.col(_pref(var, "id")).alias("id")), labels[var]
 
     def _run_delete(self, stmt: ast.DeleteStmt) -> PropertyGraph:
         """DELETE cascades to incident edges (`src/cypher/executor.rs:
         650-687`; cascade `src/storage/mem_store.rs:123-147`)."""
         victims, label = self._match_victims(stmt.match, stmt.where, stmt.var)
-        return dml.delete_ids(self._copy(), label, victims)
+        return dml.delete_ids(self.g, label, victims)
 
     def _run_set(self, stmt: ast.SetStmt) -> PropertyGraph:
         """SET merges properties under the match predicate
@@ -656,8 +619,7 @@ class Compiler:
         (`src/values/value.rs:14`); here that extends the table schema
         with NULLs for unmatched rows."""
         victims, label = self._match_victims(stmt.match, stmt.where, stmt.var)
-        g = self._copy()
-        g.nodes[label] = dml.set_props_on(g.nodes[label], victims, _lits(stmt.updates))
+        g, _ = dml.update(self.g, label, victims, _lits(stmt.updates))
         return g
 
     def _run_merge(self, stmt: ast.MergeStmt) -> PropertyGraph:
@@ -665,7 +627,7 @@ class Compiler:
         ON MATCH SET (`src/cypher/executor.rs:740-1211`). A label the
         graph lacks matches nothing, so MERGE opens it, as CREATE does."""
         np = stmt.node
-        g = self._copy(clear_integrity=True)
+        g = self.g
         if np.label is None:
             # MERGE (n) — matches ANY node (reference
             # `tests/merge_comprehensive_test.rs:392-406`): a no-op on a
@@ -680,9 +642,9 @@ class Compiler:
         nodes = g.nodes.get(np.label)
         cond = None if nodes is None else traversal.match_props(nodes, np.props)
         if nodes is None or nodes.filter(cond).isEmpty():
-            self._create_node(g, dc_replace(np, props=(*np.props, *stmt.on_create)))
+            g, _ = self._create_node(g, dc_replace(np, props=(*np.props, *stmt.on_create)))
         elif stmt.on_match:
-            g.nodes[np.label] = dml.set_props(nodes, cond, _lits(stmt.on_match))
+            g, _ = dml.update(g, np.label, cond, _lits(stmt.on_match))
         return g
 
 

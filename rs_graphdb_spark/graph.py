@@ -29,7 +29,7 @@ adjacency lists).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -173,16 +173,36 @@ class PropertyGraph:
     #: nodes, with FK integrity). Lets a hop skip its target-node
     #: attribute join when no target column is read
     #: (``operators.traversal.attach``, for Cypher and ``Query`` alike —
-    #: the join is then a 1:1 attach that changes nothing). Writes that
-    #: mint no id and add no edge keep the flag: validated DML
-    #: (merge_nodes anti-joins against existing keys; delete cascades
-    #: incident edges), HTTP PUT/DELETE and Cypher SET, DELETE and
-    #: FOREACH (none may SET ``id``). Writes that mint ids or add edges
-    #: clear it: dml create_nodes (id minted from a possibly-colliding
-    #: natural key), the HTTP server's create nodes/rels (arbitrary client
-    #: ids and endpoints) and Cypher CREATE and MERGE. Graphs assembled
-    #: ad hoc default to False and keep the full join.
+    #: the join is then a 1:1 attach that changes nothing). Graphs
+    #: assembled ad hoc default to False and keep the full join.
+    #:
+    #: The claim is kept per table: a write that inserts rows (mints ids
+    #: or adds edges — HTTP and gRPC creates, Cypher CREATE and MERGE,
+    #: ``dml`` creates and merges) voids it only for the labels and rel
+    #: types it writes (:meth:`without_integrity`); ``intact`` then names
+    #: the tables it still holds for, and :meth:`has_integrity` asks
+    #: about the tables one hop reads. SET and DELETE keep it: neither
+    #: may change ``id``, and a delete cascades into incident edges.
     edge_integrity: bool = False
+    intact: frozenset = frozenset()
+    #: ``(is_rel, name)`` → ``operators.dml.Delta``: how a written table's
+    #: frame is made of a resident base and a driver-side write delta.
+    #: Only dml reads it; an entry whose frame is no longer the table's
+    #: is ignored.
+    deltas: dict = field(default_factory=dict)
+
+    def has_integrity(self, *names: str) -> bool:
+        """Whether the ``edge_integrity`` claim holds for every named label
+        and rel type."""
+        return self.edge_integrity or self.intact.issuperset(names)
+
+    def without_integrity(self, *names: str) -> "PropertyGraph":
+        """This graph with the ``edge_integrity`` claim voided for the named
+        labels and rel types only."""
+        keep = (set(self.nodes) | set(self.edges) if self.edge_integrity
+                else self.intact)
+        return replace(self, edge_integrity=False,
+                       intact=frozenset(keep).difference(names))
 
     # -- scans ------------------------------------------------------------
     def label_scan(self, label: str) -> DataFrame:

@@ -17,7 +17,9 @@ monotonically_increasing_id, no window over a global order, zero shuffles.
 The load runs no Spark job: each table's schema comes from its parquet
 footer, read on the driver (``session.read_parquet``), and every frame
 below is a lazy plan over those relations. Nothing is cached or
-materialized here, so query work stays in the queries.
+materialized here, so query work stays in the queries; only the HTTP
+server makes a graph's tables resident, on its first request
+(``sources/http_server.py``).
 """
 
 from __future__ import annotations

@@ -80,15 +80,18 @@ def node_frame(graph: PropertyGraph, label: str, prefix: str = "",
     return df.select([F.col(c).alias(prefix + c) for c in df.columns])
 
 
-def attach(graph: PropertyGraph, frame: DataFrame, label: str,
-           prefix: str = "", props=(), needed: bool = False) -> DataFrame:
+def attach(graph: PropertyGraph, frame: DataFrame, rel_type: str,
+           label: str, prefix: str = "", props=(),
+           needed: bool = False) -> DataFrame:
     """The target-join rule: inner-join ``label``'s node table
-    (:func:`node_frame`) to ``frame`` on ``prefix + "id"`` when the caller
-    reads its columns (``needed``), ``props`` filter it, or
-    ``graph.edge_integrity`` is false — the join then drops dangling
-    endpoints and repeats duplicate ids. Under integrity every endpoint
-    exists once, so the id-only frame is already exact."""
-    if not (needed or props or not graph.edge_integrity):
+    (:func:`node_frame`) to ``frame``, the output of a hop over
+    ``rel_type``, on ``prefix + "id"`` when the caller reads its columns
+    (``needed``), ``props`` filter it, or the ``edge_integrity`` claim
+    does not hold for both ``rel_type`` and ``label``
+    (``graph.has_integrity``) — the join then drops dangling endpoints
+    and repeats duplicate ids. Under integrity every endpoint exists
+    once, so the id-only frame is already exact."""
+    if not (needed or props or not graph.has_integrity(rel_type, label)):
         return frame
     return frame.join(node_frame(graph, label, prefix, props), prefix + "id")
 

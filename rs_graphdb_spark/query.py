@@ -111,12 +111,14 @@ class Query:
                             rel_type, direction, edge_cols=edge_cols)
         if dedup:
             hopped = hopped.dropDuplicates(["id"])
-        return self._landed(hopped, label)
+        return self._landed(hopped, rel_type, label)
 
-    def _landed(self, ids: DataFrame, label: str) -> "Query":
-        """The frontier after a hop or expansion landing on ``label``."""
-        return replace(self, frontier=attach(self.graph, ids, label, needed=True),
-                       label=label, hop_frontier=attach(self.graph, ids, label))
+    def _landed(self, ids: DataFrame, rel_type: str, label: str) -> "Query":
+        """The frontier after a hop or expansion over ``rel_type`` landing
+        on ``label``."""
+        return replace(
+            self, frontier=attach(self.graph, ids, rel_type, label, needed=True),
+            label=label, hop_frontier=attach(self.graph, ids, rel_type, label))
 
     def out(self, rel_type: str, dedup: bool = False,
             edge_cols: tuple[str, ...] = (),
@@ -188,7 +190,7 @@ class Query:
         if dst_label is None:
             return replace(self, frontier=ids, label=None,
                            hop_frontier=None)
-        return self._landed(ids, dst_label)
+        return self._landed(ids, rel_type, dst_label)
 
     def in_variable_length(self, rel_type: str, min_hops: int,
                            max_hops: int | None) -> "Query":

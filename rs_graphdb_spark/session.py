@@ -11,10 +11,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import _parse_datatype_json_string
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 
-def local_df(spark: SparkSession, data, schema: str):
+def local_df(spark: SparkSession, data, schema: str | StructType):
     """Small local-literal DataFrame via the Arrow fast path.
 
     ``spark.createDataFrame(list_of_tuples)`` pickles rows into a Python
@@ -27,7 +27,7 @@ def local_df(spark: SparkSession, data, schema: str):
     import pandas as pd
     from pyspark.sql.types import _parse_datatype_string
 
-    st = _parse_datatype_string(schema)
+    st = _parse_datatype_string(schema) if isinstance(schema, str) else schema
     rows = [tuple(r) if not isinstance(r, tuple) else r for r in data]
     if not rows:
         # EMPTY seeds must be JVM-side too (r11): `createDataFrame([],

@@ -20,9 +20,22 @@ unbounded result).
 
 Write semantics: the graph is immutable DataFrames, so every write swaps
 the served `PropertyGraph` for a rewritten one (exactly how Cypher DML
-executes). Single-row POSTs exist for API parity; the scale path is the
-`/batch/*` endpoints (one union per request, not per row), mirroring the
-reference's `batch_create_nodes` (`src/graph/db.rs:170-203`).
+executes). Each written table is its base plus a bounded write delta on
+the driver (``dml``'s delta rule), so no write leaves a join in a plan
+and what a read costs does not depend on the write history. Single-row
+POSTs exist for API parity; the scale path is the `/batch/*` endpoints
+(one insert per request, not per row), mirroring the reference's
+`batch_create_nodes` (`src/graph/db.rs:170-203`).
+
+Residency: construction runs no Spark job and registers no cache. The
+first request, JSON or gRPC, starts a thread that caches every node
+table and edge set in place (``dml.resident``) and then fills each
+cache, so later reads scan in-memory batches instead of re-reading
+parquet and re-deriving edge sets. Compaction moves a table to a new
+resident base and releases the old one. ``stop()`` releases every resident frame and
+base the server holds. Two servers over the same tables share their
+caches, so stopping one sends the other back to parquet: slower, never
+wrong.
 
 Id namespaces: a node id at or above ``graph.ID_STRIDE`` lies in one
 label's namespace, and every write here keeps it there (the endpoint
@@ -58,7 +71,6 @@ import logging
 import operator
 import re
 import threading
-from dataclasses import replace as dc_replace
 from functools import reduce
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -67,7 +79,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.cypher import ast, compiler
-from rs_graphdb_spark.graph import ANY_LABEL, EdgeSet, PropertyGraph, holds, label_of
+from rs_graphdb_spark.graph import ANY_LABEL, PropertyGraph, holds, label_of
 from rs_graphdb_spark.operators import dml
 from rs_graphdb_spark.session import local_df
 from rs_graphdb_spark.sources.json_api import json_query, substring_search
@@ -197,6 +209,12 @@ class GraphHTTPServer:
         # Writers only. Re-entrant: _route holds it across a write's whole
         # read-compute-swap, and the per-helper blocks re-acquire it.
         self._lock = threading.RLock()
+        # the thread that makes the served tables resident (_resident),
+        # and the frames it cached, until stop() releases them
+        self._residency: threading.Thread | None = None
+        self._residency_lock = threading.Lock()  # not the write lock:
+        self._held: list[DataFrame] = []          # reads never wait on it
+        self._stopping = threading.Event()        # ends the fill early
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -282,6 +300,28 @@ class GraphHTTPServer:
 
     # -- routing ----------------------------------------------------------
 
+    def _resident(self) -> None:
+        """On the first request, make the served tables resident on a
+        thread of its own, which no request waits for: register their
+        caches (``dml.resident``; planning ~20 tables takes 0.15-1 s),
+        then fill them, one job per table, so that no read pays a
+        table's first fill. Construction stays free of Spark jobs and
+        cache registration."""
+        if self._residency is None:
+            with self._residency_lock:
+                if self._residency is None:
+                    self._residency = threading.Thread(
+                        target=self._fill, args=(self.graph,),
+                        name="residency", daemon=True)
+                    self._residency.start()
+
+    def _fill(self, g: PropertyGraph) -> None:
+        self._held.extend(dml.resident(g))
+        for df in self._held:
+            if self._stopping.is_set():
+                return
+            df.count()
+
     def _route(self, method: str, path: str, body_fn) -> dict | None:
         # Reads run lock-free: _route_locked takes one snapshot of the
         # immutable self.graph. Writes hold the lock across their whole
@@ -289,6 +329,7 @@ class GraphHTTPServer:
         # new graph and swaps it never interleaves with another writer's
         # swap (lost update). A Cypher body is parsed here, once, to tell
         # which it is; _route_locked then receives the parsed statement.
+        self._resident()
         if method == "POST" and path == "/cypher":
             stmt = compiler.parse_cypher(body_fn()["query"])
             body_fn = lambda: {"statement": stmt}  # noqa: E731
@@ -322,6 +363,7 @@ class GraphHTTPServer:
 
         if method != "POST":
             return None
+        self._resident()
         if path == "/grpc/CreateNode":
             req = pw.decode_create_node_request(body)
             label = (req["labels"] or [ANY_LABEL])[0]
@@ -505,24 +547,17 @@ class GraphHTTPServer:
             by_label.setdefault(label, []).append(props)
         for label, rows in by_label.items():
             dml.check_namespace(label, [int(r["id"]) for r in rows], "node id")
-        with self._lock:
-            nodes = dict(self.graph.nodes)
-            created = 0
-            for label, rows in by_label.items():
-                import pandas as pd
+        import pandas as pd
 
+        with self._lock:
+            g = self.graph
+            for label, rows in by_label.items():
                 new = spark.createDataFrame(pd.DataFrame(rows))
                 new = new.select(F.col("id").cast("long"), *
                                  [c for c in new.columns if c != "id"])
-                nodes[label] = (dml.append_rows(nodes[label], new)
-                                if label in nodes else new)
-                created += len(rows)
-            # client-supplied node ids are not validated unique →
-            # edge_integrity's unique-id premise no longer holds
-            # (r10 ADVICE #1); the flag only gates the hop-join elision
-            self.graph = dc_replace(self.graph, nodes=nodes,
-                                    edge_integrity=False)
-        return {"ok": True, "created": created}
+                g = dml.insert(g, label, new)
+            self.graph = g
+        return {"ok": True, "created": len(items)}
 
     def _create_rels(self, items: list[dict]) -> dict:
         spark = next(iter(self.graph.nodes.values())).sparkSession
@@ -532,63 +567,52 @@ class GraphHTTPServer:
                 (int(it["edge_id"]), int(it["src"]), int(it["dst"]))
             )
         with self._lock:
-            edges = dict(self.graph.edges)
-            created = 0
+            g = self.graph
             for rt, rows in by_type.items():
-                es = edges.get(rt)
+                es = g.edges.get(rt)
                 dml.check_namespace(es.src_label if es else ANY_LABEL,
                                     [s for _, s, _ in rows], f"{rt} src")
                 dml.check_namespace(es.dst_label if es else ANY_LABEL,
                                     [d for _, _, d in rows], f"{rt} dst")
                 new = local_df(spark, rows, "edge_id long, src long, dst long")
-                edges[rt] = (
-                    dc_replace(es, df=dml.append_rows(es.df, new)) if es
-                    else EdgeSet(df=new, src_label=ANY_LABEL, dst_label=ANY_LABEL)
-                )
-                created += len(rows)
-            # client-supplied (src, dst) endpoints are not validated to
-            # exist → a dangling endpoint breaks the 1:1 premise of the
-            # hop-join elision; clear the flag (r10 ADVICE #1)
-            self.graph = dc_replace(self.graph, edges=edges,
-                                    edge_integrity=False)
-        return {"ok": True, "created": created}
+                g = dml.insert(g, rt, new, rel=True)
+            self.graph = g
+        return {"ok": True, "created": len(items)}
 
-    # PUT: the label probe above the lock, then dml.set_props; not
-    # dml.update_node_props, whose existence check is one more job per PUT
+    # PUT and DELETE read the label whose namespace holds the id first,
+    # so a PUT is one bounded job; _find_label probes the rest only when
+    # the id is not there
     def _update_node(self, node_id: int, props: dict) -> dict:
-        lb = _find_label(self.graph, node_id)
         updates = {k: F.lit(v) for k, v in props.items() if k != "id"}
         with self._lock:
-            nodes = dict(self.graph.nodes)
-            nodes[lb] = dml.set_props(nodes[lb], F.col("id") == node_id, updates)
-            self.graph = dc_replace(self.graph, nodes=nodes)
+            lb = label_of(self.graph.nodes, node_id)
+            hit = 0
+            if lb is not None:
+                g, hit = dml.update(self.graph, lb, [node_id], updates)
+            if not hit:
+                lb = _find_label(self.graph, node_id)
+                g, _ = dml.update(self.graph, lb, [node_id], updates)
+            self.graph = g
         return {"ok": True}
 
     def _delete_node(self, node_id: int) -> dict:
-        lb = _find_label(self.graph, node_id)
         with self._lock:
-            self.graph = dml.delete_nodes(self.graph, lb, F.col("id") == node_id)
+            lb = _find_label(self.graph, node_id)
+            self.graph = dml.delete_ids(self.graph, lb, [node_id])
         return {"ok": True}
 
     def _update_rel(self, edge_id: int, props: dict) -> dict:
-        rt = _find_rel_type(self.graph, edge_id)
         updates = {k: F.lit(v) for k, v in props.items()
                    if k not in ("edge_id", "src", "dst")}
         with self._lock:
-            edges = dict(self.graph.edges)
-            df = dml.set_props(edges[rt].df, F.col("edge_id") == edge_id, updates)
-            edges[rt] = dc_replace(edges[rt], df=df)
-            self.graph = dc_replace(self.graph, edges=edges)
+            rt = _find_rel_type(self.graph, edge_id)
+            self.graph, _ = dml.update(self.graph, rt, [edge_id], updates, rel=True)
         return {"ok": True}
 
     def _delete_rel(self, edge_id: int) -> dict:
-        rt = _find_rel_type(self.graph, edge_id)
         with self._lock:
-            edges = dict(self.graph.edges)
-            edges[rt] = dc_replace(
-                edges[rt], df=edges[rt].df.filter(F.col("edge_id") != edge_id)
-            )
-            self.graph = dc_replace(self.graph, edges=edges)
+            rt = _find_rel_type(self.graph, edge_id)
+            self.graph = dml.delete_edges(self.graph, rt, [edge_id])
         return {"ok": True}
 
     # -- lifecycle ---------------------------------------------------------
@@ -599,5 +623,14 @@ class GraphHTTPServer:
         return self
 
     def stop(self) -> None:
+        """Stop serving and release the resident tables."""
         self._httpd.shutdown()
         self._httpd.server_close()
+        if self._residency is not None:
+            self._stopping.set()
+            self._residency.join()
+            with self._lock:
+                dml.release(self.graph)
+                for df in self._held:
+                    df.unpersist()
+                self._held.clear()

@@ -53,7 +53,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.graph import EdgeSet, PropertyGraph, holds
-from rs_graphdb_spark.operators.dml import set_props_on
+from rs_graphdb_spark.operators.dml import drop_keys, set_props
 
 #: dataset partition column (lives in directory names, never in data files)
 PB = "pb"
@@ -407,7 +407,7 @@ def delete_nodes_partitioned(
     updates: dict[str, str] = {}
     staged = _rewrite_buckets(
         spark, path, node_rel, vb,
-        lambda df: df.join(victims, "id", "left_anti"),
+        lambda df: drop_keys(df, victims, "id"),
     )
     if staged:
         updates[f"nodes/{label}"] = staged
@@ -417,9 +417,7 @@ def delete_nodes_partitioned(
         if holds(info["src_label"], label):
             staged = _rewrite_buckets(
                 spark, path, touched, vb,
-                lambda df: df.join(
-                    victims.withColumnRenamed("id", "src"), "src", "left_anti"
-                ),
+                lambda df: drop_keys(df, victims, "src"),
             )
             if staged:
                 updates[f"edges/{rt}"] = staged
@@ -434,9 +432,7 @@ def delete_nodes_partitioned(
             dst_vb = [r[0] for r in hit.select(PB).distinct().collect()]
             staged = _rewrite_buckets(
                 spark, path, touched, dst_vb,
-                lambda df: df.join(
-                    victims.withColumnRenamed("id", "dst"), "dst", "left_anti"
-                ),
+                lambda df: drop_keys(df, victims, "dst"),
             )
             if staged:
                 updates[f"edges/{rt}"] = staged
@@ -453,9 +449,9 @@ def set_props_partitioned(
     updates: dict[str, Column],
 ) -> int:
     """SET under a match predicate, rewriting only buckets that contain a
-    matching row with :func:`operators.dml.set_props_on` (merge-not-replace
-    semantics and the type rule), published with one manifest flip.
-    Returns matched count."""
+    matching row with :func:`operators.dml.set_props` under the same
+    predicate (merge-not-replace semantics and the type rule), published
+    with one manifest flip. Returns matched count."""
     ver, manifest = read_manifest(path)
     n = manifest["id_buckets"]
     node_rel = manifest["tables"][f"nodes/{label}"]
@@ -470,7 +466,7 @@ def set_props_partitioned(
 
     staged = _rewrite_buckets(
         spark, path, node_rel, _victim_buckets(matched, "id", n),
-        lambda df: set_props_on(df, matched, updates),
+        lambda df: set_props(df, cond, updates),
     )
     if staged:
         _commit(path, ver, manifest, {f"nodes/{label}": staged})
